@@ -446,25 +446,39 @@ def q_ngram_containment(spark, sf_dir):
                                    n=3, threshold=0.6)
 
 
-def q_minhash_lsh(spark, sf_dir):
-    """md5-hex MinHash (lexicographic min over md5 hex strings): fully
-    DuckDB-reproducible, so the correctness gate hash-checks it.  The
-    xxhash64 fast path (minhash_lsh_pairs) is the bench/production variant
-    — identical plan shape, cheaper hashing."""
-    return minhash_lsh_pairs_md5(_t(spark, sf_dir, "documents"),
-                                 n=3, num_hashes=32, bands=8, threshold=0.5)
+def q_minhash_lsh(spark, sf_dir, use_md5=True):
+    """MinHash+LSH near-dup pairs.  The md5-hex family (lexicographic min
+    over md5 hex strings) is fully DuckDB-reproducible, so the
+    correctness gate hash-checks it; ``use_md5=False`` is the xxhash64
+    family through the same banding and verify core."""
+    pairs = minhash_lsh_pairs_md5 if use_md5 else minhash_lsh_pairs
+    return pairs(_t(spark, sf_dir, "documents"),
+                 n=3, num_hashes=32, bands=8, threshold=0.5)
 
 
-def q_simhash(spark, sf_dir):
-    """md5-derived SimHash — DuckDB-reproducible twin of the xxhash64
-    bench variant (simhash_dup_pairs)."""
-    return simhash_md5_pairs(_t(spark, sf_dir, "documents"), max_hamming=3)
+def q_simhash(spark, sf_dir, use_md5=True):
+    """SimHash near-dup pairs at Hamming <= 3: md5 token hashes
+    (DuckDB-reproducible), or the blake2b family with
+    ``use_md5=False`` — both through the same banded Hamming join."""
+    pairs = simhash_md5_pairs if use_md5 else simhash_dup_pairs
+    return pairs(_t(spark, sf_dir, "documents"), max_hamming=3)
+
+
+def _ann_queries(emb):
+    """The ANN probe queries: the vectors with vec_id < 5."""
+    return (emb.filter(F.col("vec_id") < 5)
+            .select(F.col("vec_id").alias("query_id"), "embedding"))
+
+
+def _ann_lsh(emb, queries_df, k=10):
+    """The gate's LSH index: md5 planes, 4 tables of 4 bits."""
+    return lsh_bucketed_topk_md5(emb, queries_df, k=k, planes=4, dim=64,
+                                 tables=4)
 
 
 def q_ann_topk(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    queries = (emb.filter(F.col("vec_id") < 5)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
+    queries = _ann_queries(emb)
     return brute_force_topk(emb, queries, k=10)
 
 
@@ -812,17 +826,13 @@ def q_salted_agg(spark, sf_dir):
 
 
 def q_ann_lsh(spark, sf_dir):
-    """Approximate ANN through the md5-deterministic LSH twin (Rademacher
-    planes from md5 hex): DuckDB rebuilds the identical bands, candidates,
-    rerank and tie-broken top-k, upgrading this row from rows-only to a
-    full value hash (same upgrade path ann_pq took in round 5).  The
-    multiprobe xxhash64 production variant (lsh_bucketed_topk) stays the
-    bench path."""
+    """Approximate ANN through the LSH top-k core over md5 Rademacher
+    planes: DuckDB rebuilds the identical bands, candidates, rerank and
+    tie-broken top-k, so the row gets a full value hash.
+    lsh_bucketed_topk is the same core over seeded LCG planes with
+    multiprobe."""
     emb = _t(spark, sf_dir, "embeddings")
-    queries_df = (emb.filter(F.col("vec_id") < 5)
-                  .select(F.col("vec_id").alias("query_id"), "embedding"))
-    return lsh_bucketed_topk_md5(emb, queries_df, k=10, planes=4, dim=64,
-                                 tables=4)
+    return _ann_lsh(emb, _ann_queries(emb))
 
 
 def q_token_budget(spark, sf_dir):
@@ -916,8 +926,7 @@ def q_ann_ivf(spark, sf_dir):
     DuckDB-rebuildable, so the gate hash-checks the top-k lists.  The
     Lloyd-trained production path (ivf_topk) stays the bench path."""
     emb = _t(spark, sf_dir, "embeddings")
-    queries_df = (emb.filter(F.col("vec_id") < 5)
-                  .select(F.col("vec_id").alias("query_id"), "embedding"))
+    queries_df = _ann_queries(emb)
     return ivf_topk_md5(emb, queries_df, k=10, n_centroids=16, n_probe=4)
 
 
@@ -931,10 +940,8 @@ def q_rrf_hybrid(spark, sf_dir):
     and replays the rank/fuse arithmetic."""
     from cascading_flink_spark.extensions import rrf_fuse
     emb = _t(spark, sf_dir, "embeddings")
-    queries_df = (emb.filter(F.col("vec_id") < 5)
-                  .select(F.col("vec_id").alias("query_id"), "embedding"))
-    lsh = lsh_bucketed_topk_md5(emb, queries_df, k=10, planes=4, dim=64,
-                                tables=4)
+    queries_df = _ann_queries(emb)
+    lsh = _ann_lsh(emb, queries_df)
     ivf = ivf_topk_md5(emb, queries_df, k=10, n_centroids=16, n_probe=4)
     return rrf_fuse([lsh, ivf], k=60)
 
@@ -957,10 +964,8 @@ def q_rrf_hybrid3(spark, sf_dir):
                                                   rrf_fuse)
     emb = _t(spark, sf_dir, "embeddings")
     docs = _t(spark, sf_dir, "documents")
-    queries_df = (emb.filter(F.col("vec_id") < 5)
-                  .select(F.col("vec_id").alias("query_id"), "embedding"))
-    lsh = lsh_bucketed_topk_md5(emb, queries_df, k=10, planes=4, dim=64,
-                                tables=4)
+    queries_df = _ann_queries(emb)
+    lsh = _ann_lsh(emb, queries_df)
     ivf = ivf_topk_md5(emb, queries_df, k=10, n_centroids=16, n_probe=4)
     bm = bm25_multi_scores(docs, _RRF3_TERMS)
     w = (Window.partitionBy("query_id")
@@ -990,10 +995,8 @@ def _lsh_qrels_frames(spark, sf_dir, kt: int = 20):
     from pyspark.sql import Window
     from cascading_flink_spark.extensions import brute_force_topk
     emb = _t(spark, sf_dir, "embeddings")
-    queries_df = (emb.filter(F.col("vec_id") < 5)
-                  .select(F.col("vec_id").alias("query_id"), "embedding"))
-    lsh = lsh_bucketed_topk_md5(emb, queries_df, k=10, planes=4, dim=64,
-                                tables=4)
+    queries_df = _ann_queries(emb)
+    lsh = _ann_lsh(emb, queries_df)
     truth = brute_force_topk(emb, queries_df, k=kt)
     w = (Window.partitionBy("query_id")
          .orderBy(F.desc("sim"), F.asc("vec_id")))
@@ -1188,11 +1191,9 @@ def q_hard_negatives(spark, sf_dir):
     gold pair and a bounded window keeps the 5 hardest negatives."""
     from cascading_flink_spark.extensions import hard_negatives
     emb = _t(spark, sf_dir, "embeddings")
-    queries_df = (emb.filter(F.col("vec_id") < 5)
-                  .select(F.col("vec_id").alias("query_id"), "embedding"))
+    queries_df = _ann_queries(emb)
     gold = brute_force_topk(emb, queries_df, k=1)
-    cand = lsh_bucketed_topk_md5(emb, queries_df, k=10, planes=4, dim=64,
-                                 tables=4)
+    cand = _ann_lsh(emb, queries_df)
     return hard_negatives(cand, gold, k=5)
 
 
@@ -1204,14 +1205,11 @@ def q_ann_recall(spark, sf_dir):
     reproduced independently by the DuckDB oracle, so approximate search
     gets a full value-hash check without pretending it is exact."""
     emb = _t(spark, sf_dir, "embeddings")
-    queries_df = (emb.filter(F.col("vec_id") < 5)
-                  .select(F.col("vec_id").alias("query_id"), "embedding"))
+    queries_df = _ann_queries(emb)
     k = 10
     truth = (brute_force_topk(emb, queries_df, k=k)
              .select("query_id", "vec_id"))
-    lsh = (lsh_bucketed_topk_md5(emb, queries_df, k=k, planes=4, dim=64,
-                                 tables=4)
-           .select("query_id", "vec_id"))
+    lsh = _ann_lsh(emb, queries_df, k=k).select("query_id", "vec_id")
     ivf = (ivf_topk_md5(emb, queries_df, k=k, n_centroids=16, n_probe=4)
            .select("query_id", "vec_id"))
 
@@ -2545,9 +2543,7 @@ def q_mrl_recall(spark, sf_dir):
     tr = emb.select("vec_id",
                     F.expr("slice(embedding, 1, 16)")
                      .alias("embedding"))
-    queries_df = (tr.filter(F.col("vec_id") < 5)
-                  .select(F.col("vec_id").alias("query_id"),
-                          "embedding"))
+    queries_df = _ann_queries(tr)
     results = brute_force_topk(tr, queries_df, k=10)
     _lsh, qrels = _lsh_qrels_frames(spark, sf_dir)
     return recall_at_k(results, qrels, k=10, rel_threshold=11)
@@ -2608,11 +2604,8 @@ def q_rbo(spark, sf_dir):
     LSH queries (the reference list)."""
     from cascading_flink_spark.extensions import rbo_at_k
     emb = _t(spark, sf_dir, "embeddings")
-    queries_df = (emb.filter(F.col("vec_id") < 5)
-                  .select(F.col("vec_id").alias("query_id"),
-                          "embedding"))
-    lsh = lsh_bucketed_topk_md5(emb, queries_df, k=10, planes=4,
-                                dim=64, tables=4)
+    queries_df = _ann_queries(emb)
+    lsh = _ann_lsh(emb, queries_df)
     ivf = ivf_topk_md5(emb, queries_df, k=10, n_centroids=16,
                        n_probe=4)
     return rbo_at_k(lsh, ivf, k=10, p_x1000=900)
@@ -3983,8 +3976,7 @@ def q_ann_pq(spark, sf_dir):
     Lloyd-trained production path (pq_topk) keeps its pytest recall/score-
     fidelity coverage and is what bench.py measures."""
     emb = _t(spark, sf_dir, "embeddings")
-    queries_df = (emb.filter(F.col("vec_id") < 5)
-                  .select(F.col("vec_id").alias("query_id"), "embedding"))
+    queries_df = _ann_queries(emb)
     return pq_topk_md5(emb, queries_df, k=10, m=8, ksub=16, dim=64)
 
 
@@ -4006,8 +3998,7 @@ def q_sq_topk(spark, sf_dir):
     corpus side dequantized from 8-bit codes, query side full precision
     — the FAISS SQ8 trade, scoring in native zip_with/aggregate."""
     emb = _t(spark, sf_dir, "embeddings")
-    queries_df = (emb.filter(F.col("vec_id") < 5)
-                  .select(F.col("vec_id").alias("query_id"), "embedding"))
+    queries_df = _ann_queries(emb)
     return sq_topk(emb, queries_df, k=10, dim=64)
 
 
@@ -4019,15 +4010,16 @@ def q_overlap_chunks(spark, sf_dir):
                           context_len=32, stride=24)
 
 
-def q_dedup_against(spark, sf_dir):
-    """Incremental cross-corpus dedup (dedup_against, minhash md5 mode):
-    odd-id docs are the incoming batch, even-id docs the curated
-    reference; near-dups of the reference are dropped.  Candidates come
-    from the new x ref banded join only — never ref x ref."""
+def q_dedup_against(spark, sf_dir, use_md5=True):
+    """Incremental cross-corpus dedup (dedup_against, minhash mode; md5
+    family for the gate, xxhash64 with ``use_md5=False``): odd-id docs
+    are the incoming batch, even-id docs the curated reference;
+    near-dups of the reference are dropped.  Candidates come from the
+    new x ref banded join only — never ref x ref."""
     docs = _t(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 2 == 1)
     ref = docs.filter(F.col("doc_id") % 2 == 0)
-    out = dedup_against(new, ref, method="minhash", use_md5=True,
+    out = dedup_against(new, ref, method="minhash", use_md5=use_md5,
                         threshold=0.5)
     return out.select("doc_id", "source")
 
@@ -4111,31 +4103,46 @@ def q_group_split(spark, sf_dir):
                        test_frac=0.2).select("doc_id", "source", "split")
 
 
-def q_curation_flagship(spark, sf_dir):
-    """The end-to-end curation flagship (curate_corpus): clean ->
-    Gopher+blocklist gates -> canonical-URL dedup -> md5-MinHash LSH
-    dedup (connected components, keep min-id representative) ->
-    benchmark decontamination (8-grams, doc_id%20==0 held out) ->
-    temperature mixture (8000-token budget) -> leakage-safe source
-    split -> sequence packing.  One declarative plan; the oracle
-    replays every stage (md5 twin).  The xxhash64 fast-hash variant of
-    stage 4 is the bench path (identical plan shape)."""
+def _flagship_docs(spark, sf_dir):
+    return _t(spark, sf_dir, "documents").withColumn("url", _messy_url())
+
+
+def _cleaned_slice(docs, mod):
+    """The cleaned ``(doc_id, text)`` rows with ``doc_id % mod == 0``."""
     from cascading_flink_spark.extensions.text import clean_text_expr
-    docs = _t(spark, sf_dir, "documents").withColumn("url", _messy_url())
-    bench = docs.filter(F.col("doc_id") % 20 == 0).select(
+    return docs.filter(F.col("doc_id") % mod == 0).select(
         "doc_id", clean_text_expr(F.coalesce("text", F.lit(""))).alias("text"))
-    corpus = docs.filter(F.col("doc_id") % 20 != 0)
+
+
+def _curate_flagship(docs, use_md5, **stage_kwargs):
+    """The flagship chain shared by the curation_* queries: doc_id%20==0
+    is the held-out benchmark, the rest the corpus; ``stage_kwargs``
+    switch on the opt-in stages.  ``use_md5=False`` runs the near-dup
+    stage on the xxhash64 MinHash family (identical plan shape) — the
+    bench spelling; the oracle replays the md5 family."""
     return curate_corpus(
-        corpus, bench, use_md5=True,
+        docs.filter(F.col("doc_id") % 20 != 0), _cleaned_slice(docs, 20),
+        use_md5=use_md5,
         gopher_kwargs=dict(min_words=30, max_words=120,
                            min_mean_word_len_x100=300,
                            max_mean_word_len_x100=450,
                            min_stop_hits=1),
         blocklist_terms=["dup"],
-        total_budget=8000, test_frac=0.2, context_len=512)
+        total_budget=8000, test_frac=0.2, context_len=512, **stage_kwargs)
 
 
-def q_curation_dsir(spark, sf_dir):
+def q_curation_flagship(spark, sf_dir, use_md5=True):
+    """The end-to-end curation flagship (curate_corpus): clean ->
+    Gopher+blocklist gates -> canonical-URL dedup -> MinHash LSH
+    dedup (connected components, keep min-id representative) ->
+    benchmark decontamination (8-grams, doc_id%20==0 held out) ->
+    temperature mixture (8000-token budget) -> leakage-safe source
+    split -> sequence packing.  One declarative plan; the oracle
+    replays every stage."""
+    return _curate_flagship(_flagship_docs(spark, sf_dir), use_md5)
+
+
+def q_curation_dsir(spark, sf_dir, use_md5=True):
     """The flagship with the opt-in DSIR quality-targeted-selection
     stage (dsir_kwargs): after decontamination, keep the 50 survivors
     whose hashed-n-gram distribution best matches a target slice
@@ -4143,26 +4150,14 @@ def q_curation_dsir(spark, sf_dir):
     like the target" pass between cleaning and mixture.  The oracle
     replays the whole chain INCLUDING the dsir bucket tables, weight
     table, normalizer and the top-50 cut."""
-    from cascading_flink_spark.extensions.text import clean_text_expr
-    docs = _t(spark, sf_dir, "documents").withColumn("url", _messy_url())
-    cleaned = clean_text_expr(F.coalesce("text", F.lit("")))
-    bench = docs.filter(F.col("doc_id") % 20 == 0).select(
-        "doc_id", cleaned.alias("text"))
-    target = docs.filter(F.col("doc_id") % 13 == 0).select(
-        "doc_id", cleaned.alias("text"))
-    corpus = docs.filter(F.col("doc_id") % 20 != 0)
-    return curate_corpus(
-        corpus, bench, use_md5=True,
-        gopher_kwargs=dict(min_words=30, max_words=120,
-                           min_mean_word_len_x100=300,
-                           max_mean_word_len_x100=450,
-                           min_stop_hits=1),
-        blocklist_terms=["dup"],
-        dsir_kwargs=dict(target=target, keep_n=50, buckets=512),
-        total_budget=8000, test_frac=0.2, context_len=512)
+    docs = _flagship_docs(spark, sf_dir)
+    return _curate_flagship(
+        docs, use_md5,
+        dsir_kwargs=dict(target=_cleaned_slice(docs, 13), keep_n=50,
+                         buckets=512))
 
 
-def q_curation_despan(spark, sf_dir):
+def q_curation_despan(spark, sf_dir, use_md5=True):
     """The flagship with the opt-in exact-substring stage enabled
     (dupspan_kwargs): after MinHash near-dup removal, strip_dup_spans
     drops every cross-document duplicated 4-gram span (smallest-id owner
@@ -4171,23 +4166,11 @@ def q_curation_despan(spark, sf_dir):
     measurably rewrites this corpus (11 of 71 sf0.01 survivors; k=8
     would be vacuous here).  Oracle = the full flagship chain with the
     stage's CTEs spliced in."""
-    from cascading_flink_spark.extensions.text import clean_text_expr
-    docs = _t(spark, sf_dir, "documents").withColumn("url", _messy_url())
-    bench = docs.filter(F.col("doc_id") % 20 == 0).select(
-        "doc_id", clean_text_expr(F.coalesce("text", F.lit(""))).alias("text"))
-    corpus = docs.filter(F.col("doc_id") % 20 != 0)
-    return curate_corpus(
-        corpus, bench, use_md5=True,
-        gopher_kwargs=dict(min_words=30, max_words=120,
-                           min_mean_word_len_x100=300,
-                           max_mean_word_len_x100=450,
-                           min_stop_hits=1),
-        blocklist_terms=["dup"],
-        dupspan_kwargs=dict(k=4, min_docs=2),
-        total_budget=8000, test_frac=0.2, context_len=512)
+    return _curate_flagship(_flagship_docs(spark, sf_dir), use_md5,
+                            dupspan_kwargs=dict(k=4, min_docs=2))
 
 
-def q_curation_margin(spark, sf_dir):
+def q_curation_margin(spark, sf_dir, use_md5=True):
     """The flagship with the opt-in cross-lingual pair-mining stage
     (margin_kwargs): after MinHash dedup, mine mutual-best ratio-margin
     pairs between the 'en' slice and the rest over dim=16 hash-trick
@@ -4196,21 +4179,9 @@ def q_curation_margin(spark, sf_dir):
     dup before decontamination.  Oracle = the full flagship chain with
     the stage's CTEs spliced in (hash_embed spelling + the margin_mine
     spelling over the post-dedup corpus)."""
-    from cascading_flink_spark.extensions.text import clean_text_expr
-    docs = _t(spark, sf_dir, "documents").withColumn("url", _messy_url())
-    bench = docs.filter(F.col("doc_id") % 20 == 0).select(
-        "doc_id", clean_text_expr(F.coalesce("text", F.lit(""))).alias("text"))
-    corpus = docs.filter(F.col("doc_id") % 20 != 0)
-    return curate_corpus(
-        corpus, bench, use_md5=True,
-        gopher_kwargs=dict(min_words=30, max_words=120,
-                           min_mean_word_len_x100=300,
-                           max_mean_word_len_x100=450,
-                           min_stop_hits=1),
-        blocklist_terms=["dup"],
-        margin_kwargs=dict(side_a="en", k=4, threshold_x1e4=10200,
-                           dim=16),
-        total_budget=8000, test_frac=0.2, context_len=512)
+    return _curate_flagship(
+        _flagship_docs(spark, sf_dir), use_md5,
+        margin_kwargs=dict(side_a="en", k=4, threshold_x1e4=10200, dim=16))
 
 
 def q_quality_classifier(spark, sf_dir):

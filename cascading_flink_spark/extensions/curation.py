@@ -47,9 +47,11 @@ zero cartesians, no driver-side loops, shuffles bounded to the URL-dedup
 key agg, the banded-join candidate generation, the per-language admission
 window, and the packing cumsum.
 
-The full chain is DuckDB-replayable when ``use_md5=True`` (the
-correctness-gate twin); ``use_md5=False`` swaps stage 4's hashes for the
-xxhash64 fast path (the bench/production variant, identical plan shape).
+Stage 4 runs the one MinHash pair core (:func:`..dedup.minhash_lsh_pairs`)
+on either hash family: ``use_md5=True`` makes the full chain
+DuckDB-replayable (what the correctness gate checks), ``use_md5=False``
+uses the xxhash64 family.  Only the hash expressions differ — same plan
+shape, same integer threshold rule.
 """
 
 from __future__ import annotations
@@ -149,6 +151,9 @@ def curate_corpus(docs: DataFrame, benchmark: DataFrame,
     # the gate below the projection on the many-split path, where the
     # gate's complex expressions could never reach parquet
     # PushedFilters anyway (scale-neutral barrier, strictly less work).
+    # Its first guard (``rand(0) > -1``) was folded away by OptimizeRand,
+    # so the gate was still pushed into the scan until the barrier changed
+    # (see _no_push); the plan is now pinned by test_curation_flagship.py.
     fanned = _fan_out(raw)
     cleaned = fanned.withColumn(text_col, clean_text_expr(
         F.coalesce(F.col(text_col), F.lit(""))))

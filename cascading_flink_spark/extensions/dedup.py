@@ -17,13 +17,19 @@ Scale design notes (the 100 TB story):
   on 16-bit chunks (pigeonhole: distance<=3 pairs share at least one of 4
   chunks) again avoids all-pairs.
 
-All operators are pure DataFrame transformations (xxhash64 for speed where
-cross-engine reproducibility is not required; md5 where it is).
+All operators are pure DataFrame transformations.  MinHash and SimHash
+each have ONE pair core with two hash families: a fast one (xxhash64 /
+blake2b) and an md5 one that DuckDB reproduces bit-for-bit.  The
+families differ only in their hash expressions — same banding, same
+verify, and for MinHash one integer threshold rule, ``agree >=
+ceil(threshold * num_hashes)``.
 """
 
 from __future__ import annotations
 
+import math
 import re
+from itertools import combinations
 
 import numpy as np
 import pandas as pd
@@ -67,20 +73,24 @@ def _fan_out(df: DataFrame) -> DataFrame:
 
 
 def _no_push(pred: Column) -> Column:
-    """Pushdown barrier for a WHOLE filter predicate (round 15):
-    ``when(rand(0) > -1, pred) else false`` evaluates to ``pred``
-    identically (the guard is always true; rand(0) is seeded, so task
-    retries recompute the same — irrelevant — values), but the
-    nondeterministic guard lives INSIDE the ``when``, where
+    """Pushdown barrier for a WHOLE filter predicate:
+    ``int(rand(0) * 0) + int(pred) == 1`` is ``pred`` (the rand term is
+    identically 0; rand(0) is seeded, so task retries recompute the same
+    — irrelevant — values) but one nondeterministic expression, so
     PushPredicateThroughNonJoin can neither push the filter nor split
     the conjunction apart to push its deterministic conjuncts
     individually (the failure mode of ``pred & rand-guard``, which the
-    optimizer splits).  Use it when a filter references EXPENSIVE
-    computed columns (regex chains) and pushdown would re-evaluate
-    them below a repartition/projection — the sibling of :func:`_once`
-    for predicates instead of projected expressions.  Codegen-friendly
-    (rand and when are codegen expressions)."""
-    return F.when(F.rand(0) > F.lit(-1.0), pred).otherwise(F.lit(False))
+    optimizer splits).  Two spellings failed: ``when(rand(0) > -1,
+    pred)`` — OptimizeRand folds the guard to ``true`` and the filter
+    pushes down — and ``when(rand(0) * 0 == 0, pred)``, which holds but
+    puts ``pred`` in a conditional branch where common subexpressions are
+    not eliminated (the flagship gate re-reads its cleaned text ~20 times:
+    measured 3x slower at sf0.1).  Use it when a filter references
+    EXPENSIVE computed columns (regex chains) and pushdown would
+    re-evaluate them below a repartition/projection — the sibling of
+    :func:`_once` for predicates instead of projected expressions.
+    Codegen-friendly (rand is a codegen expression)."""
+    return ((F.rand(0) * 0).cast("int") + pred.cast("int")) == 1
 
 
 def _once(col: Column) -> Column:
@@ -767,38 +777,43 @@ def _check_bands(num_hashes: int, bands: int) -> int:
     return rows_per_band
 
 
-
+def _banded(sig: DataFrame, num_hashes: int, bands: int,
+            band_key) -> DataFrame:
+    """``(id, sig)`` -> ``(id, sig, band, bh)``, one row per (doc, band):
+    ``bh = band_key([the band's num_hashes/bands signature entries])``.
+    The LSH banding shared by both MinHash hash families."""
+    rows_per_band = _check_bands(num_hashes, bands)
+    bk = F.explode(F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 band_key([F.col("sig")[b * rows_per_band + r]
+                           for r in range(rows_per_band)]).alias("bh"))
+        for b in range(bands)
+    ])).alias("bk")
+    return sig.select("id", "sig", bk).select("id", "sig", "bk.band", "bk.bh")
 
 
 def _xx_banded(df: DataFrame, text_col: str, id_col: str, n: int,
                num_hashes: int, bands: int) -> DataFrame:
-    """xxhash64 MinHash signatures + LSH band keys:
-    ``(id, sig, band, bh)`` — one row per (doc, band).  Shared by the
-    within-corpus pair generator and cross-corpus dedup_against."""
-    rows_per_band = _check_bands(num_hashes, bands)
+    """The xxhash64 MinHash family: ``sig`` is the one-pass Arrow
+    signature (:func:`_minhash_sig_arrow`, ``array<long>``), band keys
+    are ``xxhash64`` of the band's entries.  Fast, engine-specific."""
     sig = (_fan_out(df)
            .select(F.col(id_col).alias("id"),
                    _minhash_sig_arrow(text_col, n, num_hashes).alias("sig"))
            .filter(F.size("sig") > 0))
-    banded = sig.select(
-        "id", "sig",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
-                                  for r in range(rows_per_band)]).alias("bh"))
-            for b in range(bands)
-        ])).alias("bk"))
-    return banded.select("id", "sig", F.col("bk.band").alias("band"),
-                         F.col("bk.bh").alias("bh"))
+    return _banded(sig, num_hashes, bands, lambda rows: F.xxhash64(*rows))
 
 
 def _md5_banded(df: DataFrame, text_col: str, id_col: str, n: int,
                 num_hashes: int, bands: int,
                 _shingled: DataFrame | None = None) -> DataFrame:
-    """md5-hex MinHash signatures + band keys (the cross-engine family):
-    ``(id, __h0..__h{num_hashes-1}, band, bh)``.  ``_shingled``: a
-    caller-supplied :func:`shingle_frame` (pinned, may contain empty
-    arrays — filtered here), so compositions shingle once.
+    """The md5-hex MinHash family (cross-engine reproducible): ``sig``
+    entry i is the LEXICOGRAPHIC min of ``md5(i || '#' || shingle)``
+    over the doc's shingles (``array<string>``), band keys are
+    ``md5(concat_ws('|', band entries))``.  md5 hex strings order
+    identically in every engine, so DuckDB replays it bit-for-bit.
+    ``_shingled``: a caller-supplied :func:`shingle_frame` (pinned, may
+    contain empty arrays — filtered here), so compositions shingle once.
 
     Round-14 adjudication note: an Arrow one-pass signature reducer
     (the :func:`_minhash_sig_arrow` move, md5-exact) was prototyped
@@ -807,115 +822,89 @@ def _md5_banded(df: DataFrame, text_col: str, id_col: str, n: int,
     outputs identical): the per-row Python md5/min work plus the
     extra Arrow boundary costs more than the explode shuffle + wide
     agg it removed, and at 8x+ the banded candidate join dominates
-    either way (the xx-family's own docstring)."""
-    rows_per_band = _check_bands(num_hashes, bands)
+    either way."""
     shingled = (_shingled if _shingled is not None
                 else _fan_out(df).select(
                     F.col(id_col).alias("id"),
                     _word_shingles_arrow(text_col, n).alias("sh"))) \
         .filter(F.size("sh") > 0)
-    inv = shingled.select("id", F.explode("sh").alias("s"))
-    mins = inv.groupBy("id").agg(*[
-        F.min(F.md5(F.concat_ws("#", F.lit(str(i)), F.col("s")))).alias(f"__h{i}")
-        for i in range(num_hashes)
-    ])
-    banded = mins.select(
-        "id", *[F.col(f"__h{i}") for i in range(num_hashes)],
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws("|", *[F.col(f"__h{b * rows_per_band + r}")
-                                         for r in range(rows_per_band)])).alias("bh"))
-            for b in range(bands)
-        ])).alias("bk"))
-    return banded.select("id", *[f"__h{i}" for i in range(num_hashes)],
-                         F.col("bk.band").alias("band"),
-                         F.col("bk.bh").alias("bh"))
+    sig = (shingled.select("id", F.explode("sh").alias("s"))
+           .groupBy("id")
+           .agg(F.array(*[
+               F.min(F.md5(F.concat_ws("#", F.lit(str(i)), F.col("s"))))
+               for i in range(num_hashes)]).alias("sig")))
+    return _banded(sig, num_hashes, bands,
+                   lambda rows: F.md5(F.concat_ws("|", *rows)))
+
+
+def _minhash_verify(a: DataFrame, b: DataFrame, num_hashes: int,
+                    threshold: float, oriented: bool = True) -> DataFrame:
+    """The one MinHash candidate-verify core, for either hash family:
+    banded ``(id, sig, band, bh)`` frames ``a`` and ``b`` -> ``(id_a,
+    id_b, est_jaccard)`` for every pair sharing a band whose signatures
+    agree in ``agree >= ceil(threshold * num_hashes)`` positions (an
+    integer rule, so it never depends on how ``agree / num_hashes``
+    rounds), ``est_jaccard = floor(agree / num_hashes * 1e4 + 0.5) /
+    1e4``.  ``oriented`` keeps only ``id_a < id_b`` (a self-join, where
+    ``a`` is ``b``).
+
+    Agreement is an unrolled sum of per-position equalities —
+    whole-stage-codegen'd compares (zip_with/filter lambdas are
+    interpreted per element; over ~1M candidate pairs that dominated the
+    query).  Score and threshold BEFORE the pair-dedup: agreement is the
+    same for every banded duplicate of a pair, and dropping the two
+    signature arrays first shrinks the dedup shuffle ~20x (the
+    candidate join, which must carry both signatures, stays the
+    dominant cost at the 8x replication's dup-cluster density)."""
+    min_agree = math.ceil(threshold * num_hashes - 1e-9)
+    agree = sum(
+        (F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
+         for i in range(num_hashes)),
+        F.lit(0))
+    pairs = a.toDF("id_a", "sig_a", "band", "bh").join(
+        b.toDF("id_b", "sig_b", "band", "bh"), ["band", "bh"])
+    if oriented:
+        pairs = pairs.filter(F.col("id_a") < F.col("id_b"))
+    return (pairs.withColumn("__agree", agree)
+            .filter(F.col("__agree") >= min_agree)
+            .select("id_a", "id_b",
+                    (F.floor(F.col("__agree") / num_hashes * 10000
+                             + F.lit(0.5)) / 10000).alias("est_jaccard"))
+            .dropDuplicates(["id_a", "id_b"]))
 
 
 def minhash_lsh_pairs(df: DataFrame, n: int = 3, num_hashes: int = 32,
                       bands: int = 8, threshold: float = 0.5,
                       text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """MinHash + LSH banding candidate generation, verified by signature
-    similarity.
+    agreement — the xxhash64 hash family (:func:`_xx_banded`).
 
-    Signature: per seed i in [0, num_hashes), min(xxhash64(shingle, i)).
-    Banding: num_hashes/bands rows per band; docs sharing any band hash
-    become candidates (equality join on (band_idx, band_hash) — shuffle
-    volume O(docs x bands)).  Candidates are scored by signature agreement
-    (estimated Jaccard) and filtered at ``threshold``.
+    Banding: num_hashes/bands rows per band; docs sharing any band key
+    become candidates (equality join on (band, key) — shuffle volume
+    O(docs x bands)), verified by :func:`_minhash_verify`.
 
-    Returns (id_a, id_b, est_jaccard).  Deterministic (seeded hashes), but
-    engine-specific (xxhash64) — correctness gate uses the rows-only check.
-    """
+    Returns (id_a, id_b, est_jaccard) with id_a < id_b.  Deterministic
+    (seeded hashes) but engine-specific; :func:`minhash_lsh_pairs_md5`
+    is the same operator over the cross-engine md5 family."""
     banded = _xx_banded(df, text_col, id_col, n, num_hashes, bands)\
         .localCheckpoint(eager=False)
-    a = banded.toDF("id_a", "sig_a", "band", "bh")
-    b = banded.toDF("id_b", "sig_b", "band", "bh")
-    # Signature agreement as an unrolled sum of per-position equality —
-    # whole-stage-codegen'd integer compares.  (zip_with/filter higher-order
-    # lambdas are interpreted per element; over ~1M candidate pairs that
-    # interpretation dominated the whole query.)  Score and threshold
-    # BEFORE the pair-dedup aggregation: agreement is identical for every
-    # banded duplicate of a pair, and dropping the two 32-long signature
-    # arrays first shrinks the dedup shuffle payload ~20x (the candidate
-    # join itself, which must carry both signatures to score, remains the
-    # dominant cost at the 8x replication's dup-cluster density).
-    agree = sum(
-        (F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
-         for i in range(num_hashes)),
-        F.lit(0))
-    return (a.join(b, ["band", "bh"])
-             .filter(F.col("id_a") < F.col("id_b"))
-             .withColumn("est_jaccard", F.round(agree / F.lit(num_hashes), 4))
-             .filter(F.col("est_jaccard") >= threshold)
-             .select("id_a", "id_b", "est_jaccard")
-             .dropDuplicates(["id_a", "id_b"]))
+    return _minhash_verify(banded, banded, num_hashes, threshold)
 
 
 def minhash_lsh_pairs_md5(df: DataFrame, n: int = 3, num_hashes: int = 32,
                           bands: int = 8, threshold: float = 0.5,
                           text_col: str = "text", id_col: str = "doc_id",
                           _shingled: DataFrame | None = None) -> DataFrame:
-    """MinHash+LSH with md5-hex hash functions — cross-engine reproducible.
-
-    Same banding plan as :func:`minhash_lsh_pairs`, but each of the
-    ``num_hashes`` permutations is ``min`` over the LEXICOGRAPHIC order of
-    ``md5(seed || '#' || shingle)`` hex strings (a uniform random order of
-    the shingle universe, so a valid MinHash), and band keys are
-    ``md5(concat_ws('|', band rows))``.  md5 hex strings order identically
-    in every engine, so DuckDB reproduces the result bit-for-bit — this is
-    the correctness-gate twin of the xxhash64 fast path (which stays the
-    bench/production variant; md5 costs ~3x more per hash).
+    """:func:`minhash_lsh_pairs` over the md5-hex hash family
+    (:func:`_md5_banded`) — DuckDB reproduces the result bit-for-bit, so
+    the correctness gate hash-checks it.  md5 costs ~3x more per hash.
 
     Returns (id_a, id_b, est_jaccard) with id_a < id_b and signature
     agreement >= threshold."""
     banded = _md5_banded(df, text_col, id_col, n, num_hashes, bands,
                          _shingled=_shingled)\
         .localCheckpoint(eager=False)
-    a = banded.toDF("id_a", *[f"__a{i}" for i in range(num_hashes)], "band", "bh")
-    b = banded.toDF("id_b", *[f"__b{i}" for i in range(num_hashes)], "band", "bh")
-    agree = sum(
-        (F.when(F.col(f"__a{i}") == F.col(f"__b{i}"), 1).otherwise(0)
-         for i in range(num_hashes)),
-        F.lit(0))
-    import math
-    # ceil, not floor: agreement/num_hashes >= threshold requires the NEXT
-    # integer when threshold*num_hashes is fractional (floor admitted
-    # pairs strictly below threshold, diverging from the fast variant's
-    # est_jaccard >= threshold filter)
-    min_agree = math.ceil(threshold * num_hashes - 1e-9)
-    # score/threshold before the pair-dedup (same reorder as the fast
-    # variant): identical result set, dedup shuffle drops the 2x32 md5
-    # string columns
-    return (a.join(b, ["band", "bh"])
-             .filter(F.col("id_a") < F.col("id_b"))
-             .withColumn("__agree", agree)
-             .filter(F.col("__agree") >= min_agree)
-             .select("id_a", "id_b",
-                     (F.floor(F.col("__agree") / num_hashes * 10000 + F.lit(0.5))
-                      / 10000).alias("est_jaccard"))
-             .dropDuplicates(["id_a", "id_b"]))
+    return _minhash_verify(banded, banded, num_hashes, threshold)
 
 
 def edit_dup_pairs(df: DataFrame, max_dist: int = 10, n: int = 3,
@@ -1074,10 +1063,10 @@ def dedup_against(new: DataFrame, reference: DataFrame,
 
     ``method='exact'`` anti-joins on the whitespace-normalized md5
     content fingerprint (:func:`...text.fingerprint`); ``'minhash'``
-    drops near-duplicates via banded MinHash candidate generation and
-    signature-agreement verification at ``threshold`` (``use_md5=True``
-    switches to the cross-engine md5 hash family the oracle replays;
-    xxhash64 is the production/bench path).
+    drops near-duplicates through the MinHash verify core
+    (:func:`_minhash_verify`) at ``threshold``, on the xxhash64 hash
+    family or, with ``use_md5=True``, the md5 family the oracle
+    replays.
 
     The 100 TB shape: candidates come from a ``new x reference`` banded
     equality join only — never reference x reference — so each incoming
@@ -1125,35 +1114,14 @@ def dedup_against(new: DataFrame, reference: DataFrame,
         return clean.unionByName(verified)
     if method != "minhash":
         raise ValueError(f"unknown method {method!r}")
-    import math
-    min_agree = math.ceil(threshold * num_hashes - 1e-9)
-    if use_md5:
-        a = _md5_banded(new, text_col, id_col, n, num_hashes, bands) \
-            .toDF("id_new", *[f"__a{i}" for i in range(num_hashes)],
-                  "band", "bh")
-        b = _md5_banded(reference, text_col, id_col, n, num_hashes, bands) \
-            .toDF("id_ref", *[f"__b{i}" for i in range(num_hashes)],
-                  "band", "bh")
-        agree = sum(
-            (F.when(F.col(f"__a{i}") == F.col(f"__b{i}"), 1).otherwise(0)
-             for i in range(num_hashes)), F.lit(0))
-    else:
-        a = _xx_banded(new, text_col, id_col, n, num_hashes, bands) \
-            .toDF("id_new", "sig_a", "band", "bh")
-        b = _xx_banded(reference, text_col, id_col, n, num_hashes, bands) \
-            .toDF("id_ref", "sig_b", "band", "bh")
-        agree = sum(
-            (F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
-             for i in range(num_hashes)), F.lit(0))
-    matched = (a.join(b, ["band", "bh"])
-                .withColumn("__agree", agree)
-                .filter(F.col("__agree") >= min_agree)
-                .select(F.col("id_new").alias("__mid"))
-                .distinct())
+    banded = _md5_banded if use_md5 else _xx_banded
+    matched = (_minhash_verify(
+        banded(new, text_col, id_col, n, num_hashes, bands),
+        banded(reference, text_col, id_col, n, num_hashes, bands),
+        num_hashes, threshold, oriented=False)
+        .select(F.col("id_a").alias("__mid"))
+        .distinct())
     return new.join(matched, new[id_col] == matched["__mid"], "left_anti")
-
-
-_HEX = "0123456789abcdef"
 
 
 def _gram_fp_list(toks: list, k: int) -> list:
@@ -1300,6 +1268,24 @@ def _strip_rebuild(base: DataFrame, removed: DataFrame, id_col: str,
                      .alias(removed_name)))
 
 
+def _gram_fp_native(text_col: str, k: int) -> tuple[list, Column]:
+    """The native k-gram fingerprint spelling of :func:`strip_boilerplate`:
+    ``(grams, fp)`` where selecting ``*grams`` emits one row per k-gram
+    start ``pos`` (none for docs shorter than ``k`` tokens) and ``fp``,
+    selected next, is ``md5`` of that gram — the values of
+    :func:`_gram_fp_list`, with tokens from ``split(lower(trim(text)),
+    '\\s+')``."""
+    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    nt = F.size(toks)
+    # greatest() keeps the sequence endpoint valid if the then-branch is
+    # evaluated eagerly for short docs; the when() guard discards it
+    pos_arr = (F.when(nt >= k,
+                      F.sequence(F.lit(0), F.greatest(nt - k, F.lit(0))))
+               .otherwise(F.array().cast("array<int>")))
+    fp = F.md5(F.concat_ws(" ", F.slice(F.col("__t"), F.col("pos") + 1, k)))
+    return [toks.alias("__t"), F.explode(pos_arr).alias("pos")], fp.alias("fp")
+
+
 def strip_boilerplate(df: DataFrame, k: int = 4, w: int = 4,
                       max_df: int = 10, text_col: str = "text",
                       id_col: str = "doc_id") -> DataFrame:
@@ -1344,20 +1330,10 @@ def strip_boilerplate(df: DataFrame, k: int = 4, w: int = 4,
     identical gram strings, md5-hashed; the '#'-position string
     format is gone because it only existed to round-trip (fp, pos)
     through one Arrow string column."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    nt = F.size(toks)
-    # greatest() keeps the sequence endpoint valid if the then-branch is
-    # evaluated eagerly for short docs; the when() guard discards it
-    pos_arr = (F.when(nt >= k,
-                      F.sequence(F.lit(0), F.greatest(nt - k, F.lit(0))))
-               .otherwise(F.array().cast("array<int>")))
+    grams, fp = _gram_fp_native(text_col, k)
     fps = (_fan_out(df)
-           .select(F.col(id_col).alias("id"), toks.alias("__t"),
-                   F.explode(pos_arr).alias("pos"))
-           .select("id", "pos",
-                   F.md5(F.concat_ws(
-                       " ", F.slice(F.col("__t"), F.col("pos") + 1, k)))
-                    .alias("fp")))
+           .select(F.col(id_col).alias("id"), *grams)
+           .select("id", "pos", fp))
     hot = (fps.select("id", "fp").distinct()
               .groupBy("fp").agg(F.count(F.lit(1)).alias("__df"))
               .filter(F.col("__df") > max_df)
@@ -1375,25 +1351,121 @@ def strip_boilerplate(df: DataFrame, k: int = 4, w: int = 4,
     return _strip_rebuild(base, drop, id_col, "n_tokens", "n_dropped")
 
 
+def hamming_pairs(hashed: DataFrame, hash_col: str, max_hamming: int = 4,
+                  bands: int = 8, nbits: int = 64,
+                  id_col: str = "media_id",
+                  band_rows: int = 1) -> DataFrame:
+    """Banded Hamming self-join shared by SimHash and the perceptual
+    dedup family:
+    ``(id_a, id_b, hamming)`` for every pair of rows whose ``nbits``-bit
+    signatures differ in <= ``max_hamming`` bits.
+
+    EXACT, not approximate: the hash splits into ``bands`` equal
+    bit-sub-bands; candidate keys are every combination of ``band_rows``
+    sub-bands (all C(bands, band_rows) combos), and only key-sharing
+    pairs are verified.  A pair with <= ``max_hamming`` bit errors
+    touches at most ``max_hamming`` sub-bands, leaving
+    ``bands - max_hamming`` clean ones — so any
+    ``band_rows <= bands - max_hamming`` guarantees some emitted combo
+    is error-free on both sides (pigeonhole): banding prunes without
+    ever missing a pair.
+
+    ``band_rows`` trades rows for key cardinality, exactly like MinHash
+    LSH's rows-per-band: 1 combo key spans ``band_rows * nbits/bands``
+    bits, so key cardinality is 2^that.  With the 64-bit default,
+    ``band_rows=1`` gives 8 rows/doc at 2^8 = 256 distinct keys per
+    band — fine to ~10k rows, but beyond that EVERY bucket is a hot key
+    (measured: 160k docs -> ~625 docs/bucket -> ~400M candidate pairs,
+    a non-terminating join).  ``band_rows=2`` gives 28 rows/doc at
+    2^16 keys (160k docs -> ~2 docs/bucket, linear), the right setting
+    at corpus scale; the verify stays two integer instructions
+    (xor + popcount) per candidate.
+
+    Round 14: the banded self-join runs over DISTINCT hash VALUES, not
+    rows — perceptual hashes collapse hard on near-dup-dense corpora
+    (sf0.1: 5000 image rows -> 1594 distinct dhashes, 5000 audio rows
+    -> 134 distinct ahashes), and the band join is quadratic in bucket
+    OCCUPANCY, so deduplicating values first shrinks the join by the
+    collapse factor squared while the id expansion stays output-bound
+    (each row has exactly one value, so every qualifying id pair is
+    emitted exactly once — no pair-level dropDuplicates).  A
+    value-diverse corpus degrades to the old shape plus one cheap
+    partial-agg distinct.  The value-pair set is symmetric (both
+    orientations ride the join) so the ``id_a < id_b`` orientation
+    filter on the expansion loses no pair."""
+    return _hamming_join(hashed, hash_col, id_col, [], max_hamming, bands,
+                         nbits, band_rows)
+
+
+def _hamming_join(hashed: DataFrame, hash_col: str, id_col: str,
+                  keys: list, max_hamming: int, bands: int, nbits: int,
+                  band_rows: int) -> DataFrame:
+    """The body of :func:`hamming_pairs`, whose pairs must also agree on
+    the equality ``keys`` columns (``video_dups`` aligns frames by
+    index): ``(id_a, id_b, *keys, hamming)``."""
+    if bands <= max_hamming:
+        raise ValueError("bands must exceed max_hamming for the "
+                         "pigeonhole exactness guarantee")
+    if nbits % bands:
+        raise ValueError("bands must divide the hash width")
+    if not 1 <= band_rows <= bands - max_hamming:
+        raise ValueError("band_rows must be in [1, bands - max_hamming] "
+                         "to keep the clean-combo guarantee")
+    width = nbits // bands
+    mask = (1 << width) - 1
+
+    def sub(b):
+        return F.shiftright("__v", width * b).bitwiseAND(F.lit(mask))
+
+    combo_keys = []
+    for combo in combinations(range(bands), band_rows):
+        key = F.lit(0).cast("long")
+        for b in combo:
+            key = F.shiftleft(key, width).bitwiseOR(sub(b))
+        combo_keys.append(key)
+    # pin the hash pass: the distinct-value side and both id-expansion
+    # sides read it, and without the boundary the (expensive — it
+    # decodes or tokenizes the corpus) upstream hash stage executes
+    # three times.  localCheckpoint(eager=False) scopes the blocks to
+    # this frame's lifetime.
+    hashed = hashed.localCheckpoint(eager=False)
+    vals = hashed.select(*keys, F.col(hash_col).alias("__v")).distinct()
+    bandrows = vals.select(
+        *keys, "__v", F.posexplode(F.array(*combo_keys)).alias("band", "bv"))
+    va = bandrows.select(*keys, F.col("__v").alias("__va"), "band", "bv")
+    vb = bandrows.select(*keys, F.col("__v").alias("__vb"), "band", "bv")
+    ham = F.bit_count(F.col("__va").bitwiseXOR(F.col("__vb")))
+    # symmetric close VALUE pairs (both orientations, including
+    # __va == __vb: two rows sharing a hash value)
+    vp = (va.join(vb, [*keys, "band", "bv"])
+          .select(*keys, "__va", "__vb")
+          .dropDuplicates([*keys, "__va", "__vb"])
+          .filter(ham <= max_hamming))
+    ha = hashed.select(F.col(id_col).alias("id_a"), *keys,
+                       F.col(hash_col).alias("__va"))
+    hb = hashed.select(F.col(id_col).alias("id_b"), *keys,
+                       F.col(hash_col).alias("__vb"))
+    return (vp.join(ha, [*keys, "__va"]).join(hb, [*keys, "__vb"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b", *keys, ham.cast("int").alias("hamming")))
+
+
 def simhash_md5_pairs(df: DataFrame, max_hamming: int = 3,
                       text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """SimHash near-dup pairs with md5-derived token hashes — cross-engine
-    reproducible twin of :func:`simhash_dup_pairs` (same pigeonhole banding
-    plan; the xxhash64 variant stays the bench/production path).
+    """:func:`simhash_dup_pairs` over md5-derived token hashes — the
+    cross-engine reproducible hash family.
 
     The 64-bit token hash is the first 16 hex digits of ``md5(token)``;
     bit ``i`` is bit ``i%4`` of hex digit ``i//4``.  Per-bit +1/-1 votes
-    aggregate exactly as in the fast path; the signature is carried as 16
-    small-int hex-digit values (0-15), so banding keys are 4-digit hex
-    substrings and Hamming distance is a sum of 16 ``bit_count(xor)`` terms
-    — every operation has an identical DuckDB spelling.
+    aggregate as in the fast family; signature hex digit ``g_j = sum_k
+    (vote(4j+k) > 0) << k`` packs into one long ``sum_j g_j << 4j``
+    (bit ``i`` of the long is signature bit ``i``), so the pairs come
+    from the same exact banded join, :func:`hamming_pairs`.  Every step
+    has an identical DuckDB spelling (16 ``bit_count(xor)`` digit terms
+    there).
 
-    Returns (id_a, id_b, hamming) with id_a < id_b, hamming <= max_hamming."""
-    if max_hamming > 3:
-        raise ValueError(
-            "simhash banding uses 4 x 16-bit chunks, which only guarantees "
-            "candidate generation for max_hamming <= 3 (pigeonhole); a "
-            "higher bound would silently miss pairs")
+    Returns (id_a, id_b, hamming) with id_a < id_b, hamming <= max_hamming
+    (bigint)."""
     toks = F.array_distinct(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
     inv = _fan_out(df).select(F.col(id_col).alias("id"), F.explode(toks).alias("tk"))
     hx = F.md5("tk")
@@ -1407,41 +1479,13 @@ def simhash_md5_pairs(df: DataFrame, max_hamming: int = 3,
          .alias(f"__v{i}")
         for i in range(64)
     ])
-    # signature digit j = sum_k (vote(4j+k) > 0) << k, kept as 16 int cols
-    sig_digit = [
-        sum((F.when(F.col(f"__v{4 * j + k}") > 0, 1 << k).otherwise(0)
-             for k in range(4)), F.lit(0)).alias(f"__g{j}")
-        for j in range(16)
-    ]
-    sig = votes.select("id", *sig_digit)
-    hex_digit = [F.expr(f"substr('{_HEX}', __g{j} + 1, 1)")
-                 for j in range(16)]
-    # 4-hex-digit chunks (16 bits); pigeonhole: hamming<=3 pairs share >=1
-    chunks = sig.select(
-        "id", *[f"__g{j}" for j in range(16)],
-        F.explode(F.array(*[
-            F.struct(F.lit(c).alias("chunk"),
-                     F.concat(*hex_digit[4 * c:4 * c + 4]).alias("cv"))
-            for c in range(4)
-        ])).alias("ck"))
-    chunks = chunks.select("id", *[f"__g{j}" for j in range(16)],
-                           F.col("ck.chunk").alias("chunk"),
-                           F.col("ck.cv").alias("cv")) \
-        .localCheckpoint(eager=False)
-    a = chunks.toDF("id_a", *[f"__a{j}" for j in range(16)], "chunk", "cv")
-    b = chunks.toDF("id_b", *[f"__b{j}" for j in range(16)], "chunk", "cv")
-    dist = sum(
-        (F.bit_count(F.col(f"__a{j}").bitwiseXOR(F.col(f"__b{j}")))
-         for j in range(16)),
-        F.lit(0))
-    # hamming filter before the pair-dedup aggregation (same reorder as
-    # simhash_dup_pairs): identical result set, smaller dedup shuffle
-    return (a.join(b, ["chunk", "cv"])
-             .filter(F.col("id_a") < F.col("id_b"))
-             .withColumn("hamming", dist.cast("long"))
-             .filter(F.col("hamming") <= max_hamming)
-             .select("id_a", "id_b", "hamming")
-             .dropDuplicates(["id_a", "id_b"]))
+    packed = F.lit(0).cast("long")
+    for i in range(64):
+        packed = packed.bitwiseOR(F.shiftleft(
+            F.when(F.col(f"__v{i}") > 0, 1).otherwise(0).cast("long"), i))
+    sig = votes.select("id", packed.alias("simhash"))
+    return _simhash_pairs(sig, max_hamming).withColumn(
+        "hamming", F.col("hamming").cast("long"))
 
 
 def simhash_bits(df: DataFrame, text_col: str = "text",
@@ -1482,42 +1526,25 @@ def simhash_bits(df: DataFrame, text_col: str = "text",
                     _sig(F.col(text_col)).alias("simhash")))
 
 
+def _simhash_pairs(sig: DataFrame, max_hamming: int) -> DataFrame:
+    """``(id, simhash)`` -> ``(id_a, id_b, hamming)`` through
+    :func:`hamming_pairs` at 4 x 16-bit bands: exact for ``max_hamming
+    <= 3`` (pigeonhole), rejected above."""
+    return hamming_pairs(sig, "simhash", max_hamming=max_hamming, bands=4,
+                         nbits=64, id_col="id")
+
+
 def simhash_dup_pairs(df: DataFrame, max_hamming: int = 3,
                       text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Near-dup pairs with Hamming(simhash_a, simhash_b) <= max_hamming.
+    """Near-dup pairs with Hamming(simhash_a, simhash_b) <= max_hamming —
+    the blake2b hash family (:func:`simhash_bits`);
+    :func:`simhash_md5_pairs` is the same operator over md5 token hashes.
 
-    Pigeonhole banding: split the 64-bit signature into 4 x 16-bit chunks;
-    any pair within distance 3 agrees on >= 1 chunk, so candidates come from
-    equality joins on (chunk_idx, chunk_value) — no all-pairs shuffle."""
-    if max_hamming > 3:
-        raise ValueError(
-            "simhash banding uses 4 x 16-bit chunks, which only guarantees "
-            "candidate generation for max_hamming <= 3 (pigeonhole); a "
-            "higher bound would silently miss pairs")
-    sims = simhash_bits(df, text_col, id_col)
-    chunks = sims.select(
-        "id", "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(c).alias("chunk"),
-                     F.shiftrightunsigned("simhash", c * 16)
-                      .bitwiseAND(F.lit(0xFFFF)).alias("cv"))
-            for c in range(4)
-        ])).alias("ck"))
-    chunks = chunks.select("id", "simhash", F.col("ck.chunk").alias("chunk"),
-                           F.col("ck.cv").alias("cv")) \
-        .localCheckpoint(eager=False)
-    a = chunks.toDF("id_a", "sh_a", "chunk", "cv")
-    b = chunks.toDF("id_b", "sh_b", "chunk", "cv")
-    dist = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    # hamming filter BEFORE the pair-dedup aggregation: the xor/bit_count is
-    # codegen'd per joined row, so rejecting far pairs early shrinks the
-    # dropDuplicates shuffle to only true near-dup pairs (x4 chunk repeats)
-    return (a.join(b, ["chunk", "cv"])
-             .filter(F.col("id_a") < F.col("id_b"))
-             .withColumn("hamming", dist)
-             .filter(F.col("hamming") <= max_hamming)
-             .select("id_a", "id_b", "hamming")
-             .dropDuplicates(["id_a", "id_b"]))
+    Pigeonhole banding: any pair within distance 3 agrees on >= 1 of
+    the signature's 4 x 16-bit chunks, so candidates come from equality
+    joins on chunk values (:func:`hamming_pairs`) — no all-pairs
+    shuffle.  Returns (id_a, id_b, hamming) with id_a < id_b."""
+    return _simhash_pairs(simhash_bits(df, text_col, id_col), max_hamming)
 
 
 def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import _fan_out, _hamming_join, hamming_pairs
+
 # Canonical multimodal row: opaque bytes + typed metadata.
 MULTIMODAL_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
@@ -309,7 +311,6 @@ def image_dhash(df: DataFrame, grid: int = 8) -> DataFrame:
     otherwise run it on one core."""
     if not (1 <= grid * grid <= 64):
         raise ValueError("grid*grid must fit a 64-bit hash")
-    from .dedup import _fan_out
     df = _fan_out(df)
 
     def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -361,93 +362,6 @@ def dhash_bytes(payload: bytes | None, grid: int = 8):
     if v >= 1 << 63:
         v -= 1 << 64
     return v, dec
-
-
-def hamming_pairs(hashed: DataFrame, hash_col: str, max_hamming: int = 4,
-                  bands: int = 8, nbits: int = 64,
-                  id_col: str = "media_id",
-                  band_rows: int = 1) -> DataFrame:
-    """Banded Hamming self-join shared by the perceptual dedup family:
-    ``(id_a, id_b, hamming)`` for every pair of rows whose ``nbits``-bit
-    signatures differ in <= ``max_hamming`` bits.
-
-    EXACT, not approximate: the hash splits into ``bands`` equal
-    bit-sub-bands; candidate keys are every combination of ``band_rows``
-    sub-bands (all C(bands, band_rows) combos), and only key-sharing
-    pairs are verified.  A pair with <= ``max_hamming`` bit errors
-    touches at most ``max_hamming`` sub-bands, leaving
-    ``bands - max_hamming`` clean ones — so any
-    ``band_rows <= bands - max_hamming`` guarantees some emitted combo
-    is error-free on both sides (pigeonhole): banding prunes without
-    ever missing a pair.
-
-    ``band_rows`` trades rows for key cardinality, exactly like MinHash
-    LSH's rows-per-band: 1 combo key spans ``band_rows * nbits/bands``
-    bits, so key cardinality is 2^that.  With the 64-bit default,
-    ``band_rows=1`` gives 8 rows/doc at 2^8 = 256 distinct keys per
-    band — fine to ~10k rows, but beyond that EVERY bucket is a hot key
-    (measured: 160k docs -> ~625 docs/bucket -> ~400M candidate pairs,
-    a non-terminating join).  ``band_rows=2`` gives 28 rows/doc at
-    2^16 keys (160k docs -> ~2 docs/bucket, linear), the right setting
-    at corpus scale; the verify stays two integer instructions
-    (xor + popcount) per candidate.
-
-    Round 14: the banded self-join runs over DISTINCT hash VALUES, not
-    rows — perceptual hashes collapse hard on near-dup-dense corpora
-    (sf0.1: 5000 image rows -> 1594 distinct dhashes, 5000 audio rows
-    -> 134 distinct ahashes), and the band join is quadratic in bucket
-    OCCUPANCY, so deduplicating values first shrinks the join by the
-    collapse factor squared while the id expansion stays output-bound
-    (each row has exactly one value, so every qualifying id pair is
-    emitted exactly once — no pair-level dropDuplicates).  A
-    value-diverse corpus degrades to the old shape plus one cheap
-    partial-agg distinct.  The value-pair set is symmetric (both
-    orientations ride the join) so the ``id_a < id_b`` orientation
-    filter on the expansion loses no pair."""
-    if bands <= max_hamming:
-        raise ValueError("bands must exceed max_hamming for the "
-                         "pigeonhole exactness guarantee")
-    if nbits % bands:
-        raise ValueError("bands must divide the hash width")
-    if not 1 <= band_rows <= bands - max_hamming:
-        raise ValueError("band_rows must be in [1, bands - max_hamming] "
-                         "to keep the clean-combo guarantee")
-    width = nbits // bands
-    mask = (1 << width) - 1
-    from itertools import combinations
-
-    def sub(b):
-        return F.shiftright("__v", width * b).bitwiseAND(F.lit(mask))
-
-    combo_keys = []
-    for combo in combinations(range(bands), band_rows):
-        key = F.lit(0).cast("long")
-        for b in combo:
-            key = F.shiftleft(key, width).bitwiseOR(sub(b))
-        combo_keys.append(key)
-    # pin the hash pass: the distinct-value side and both id-expansion
-    # sides read it, and without the boundary the (expensive — it
-    # decodes the corpus) upstream hash stage executes three times.
-    # localCheckpoint(eager=False) scopes the blocks to this frame's
-    # lifetime (see dedup.py).
-    hashed = hashed.localCheckpoint(eager=False)
-    vals = hashed.select(F.col(hash_col).alias("__v")).distinct()
-    bandrows = vals.select(
-        "__v", F.posexplode(F.array(*combo_keys)).alias("band", "bv"))
-    va = bandrows.select(F.col("__v").alias("__va"), "band", "bv")
-    vb = bandrows.select(F.col("__v").alias("__vb"), "band", "bv")
-    ham = F.bit_count(F.col("__va").bitwiseXOR(F.col("__vb")))
-    vp = (va.join(vb, ["band", "bv"])
-          .select("__va", "__vb")
-          .dropDuplicates(["__va", "__vb"])
-          .filter(ham <= max_hamming))
-    ha = hashed.select(F.col(id_col).alias("id_a"),
-                       F.col(hash_col).alias("__va"))
-    hb = hashed.select(F.col(id_col).alias("id_b"),
-                       F.col(hash_col).alias("__vb"))
-    return (vp.join(ha, "__va").join(hb, "__vb")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", ham.cast("int").alias("hamming")))
 
 
 def image_dups(df: DataFrame, max_hamming: int = 4, grid: int = 8,
@@ -502,7 +416,6 @@ def audio_envelope_hash(df: DataFrame) -> DataFrame:
 
     One Arrow pass; payloads are projected away inside the stage."""
 
-    from .dedup import _fan_out
     df = _fan_out(df)
 
     def _samples(payload):
@@ -599,7 +512,6 @@ def video_frame_hashes(df: DataFrame, grid: int = 8,
     projected away inside the Arrow stage, so what shuffles is 12 bytes
     per frame."""
     n_cells = grid * (grid + 1)
-    from .dedup import _fan_out
     df = _fan_out(df)
 
     def _pack(px):
@@ -666,51 +578,9 @@ def video_dups(df: DataFrame, max_hamming: int = 4, min_frames: int = 2,
     frame pairs — output-bound (each (video, frame) has one value, so
     a (pair, frame) row appears at most once and counting rows IS
     n_close_frames; far frames contributed 0 to the old sum anyway)."""
-    if bands <= max_hamming:
-        raise ValueError("bands must exceed max_hamming")
-    nbits = grid * grid
-    if nbits % bands:
-        raise ValueError("bands must divide the hash width")
-    if not 1 <= band_rows <= bands - max_hamming:
-        raise ValueError("band_rows must be in [1, bands - max_hamming]")
-    width = nbits // bands
-    mask = (1 << width) - 1
-    from itertools import combinations
-
-    fh = video_frame_hashes(df, grid=grid).localCheckpoint(eager=False)
-
-    def sub(b):
-        return F.shiftright("__v", width * b).bitwiseAND(F.lit(mask))
-
-    combo_keys = []
-    for combo in combinations(range(bands), band_rows):
-        key = F.lit(0).cast("long")
-        for b in combo:
-            key = F.shiftleft(key, width).bitwiseOR(sub(b))
-        combo_keys.append(key)
-    vals = (fh.select("frame_idx", F.col("dhash").alias("__v"))
-            .distinct())
-    bandrows = vals.select(
-        "frame_idx", "__v",
-        F.posexplode(F.array(*combo_keys)).alias("band", "bv"))
-    va = bandrows.select("frame_idx", F.col("__v").alias("__va"),
-                         "band", "bv")
-    vb = bandrows.select("frame_idx", F.col("__v").alias("__vb"),
-                         "band", "bv")
-    ham = F.bit_count(F.col("__va").bitwiseXOR(F.col("__vb")))
-    # symmetric close VALUE pairs per frame index (both orientations,
-    # including __va == __vb: two videos sharing a frame hash)
-    vp = (va.join(vb, ["frame_idx", "band", "bv"])
-          .select("frame_idx", "__va", "__vb")
-          .dropDuplicates(["frame_idx", "__va", "__vb"])
-          .filter(ham <= max_hamming))
-    fa = fh.select(F.col("media_id").alias("id_a"), "frame_idx",
-                   F.col("dhash").alias("__va"))
-    fb = fh.select(F.col("media_id").alias("id_b"), "frame_idx",
-                   F.col("dhash").alias("__vb"))
-    return (vp.join(fa, ["frame_idx", "__va"])
-            .join(fb, ["frame_idx", "__vb"])
-            .filter(F.col("id_a") < F.col("id_b"))
+    fh = video_frame_hashes(df, grid=grid)
+    return (_hamming_join(fh, "dhash", "media_id", ["frame_idx"],
+                          max_hamming, bands, grid * grid, band_rows)
             .groupBy("id_a", "id_b")
             .agg(F.count(F.lit(1)).cast("long").alias("n_close_frames"))
             .filter(F.col("n_close_frames") >= min_frames))

@@ -48,6 +48,16 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return _dot(ad, bd) / (_norm(ad) * _norm(bd))
 
 
+def _topk_per_query(scored: DataFrame, k: int, query_id_col: str,
+                    id_col: str) -> DataFrame:
+    """The ``k`` highest-``sim`` rows per query, ties broken by ascending
+    id — the deterministic tail every top-k search here shares."""
+    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
+    return (scored.withColumn("__rn", F.row_number().over(w))
+                  .filter(F.col("__rn") <= k)
+                  .drop("__rn"))
+
+
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      query_id_col: str = "query_id") -> DataFrame:
@@ -62,10 +72,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     scored = (_fan_out(corpus).crossJoin(q)
               .filter(F.col(id_col) != F.col(query_id_col))
               .select(F.col(query_id_col), F.col(id_col), sim.alias("sim")))
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
-    return (scored.withColumn("__rn", F.row_number().over(w))
-                  .filter(F.col("__rn") <= k)
-                  .drop("__rn"))
+    return _topk_per_query(scored, k, query_id_col, id_col)
 
 
 def _hyperplane(dim: int, seed: int, planes: int) -> list[list[float]]:
@@ -81,73 +88,12 @@ def _hyperplane(dim: int, seed: int, planes: int) -> list[list[float]]:
     return out
 
 
-def _multi_signature_udf(dim: int, planes: int, seed: int, tables: int):
-    """Vectorized pandas UDF: vec -> array<long> of per-table signatures.
-
-    A Column-expression formulation would be tables*planes*dim literals —
-    Catalyst analysis/codegen on that expression tree costs more than the
-    query.  One Arrow batch + numpy matmul computes every table's signature
-    in a single pass instead."""
-    plane_mats = [
-        np.array(_hyperplane(dim, seed + 7919 * t, planes), dtype=np.float64).T
-        for t in range(tables)
-    ]  # each dim x planes
-    weights = (1 << np.arange(planes, dtype=np.uint64))
-
-    @F.pandas_udf("array<long>")
-    def sig(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        M = np.stack(v.to_numpy()).astype(np.float64)          # N x dim
-        per_table = []
-        for P in plane_mats:
-            bits = (M @ P) >= 0                                # N x planes
-            per_table.append((bits.astype(np.uint64) @ weights).astype(np.int64))
-        S = np.stack(per_table, axis=1)                        # N x tables
-        return pd.Series([row.tolist() for row in S])
-
-    return sig
-
-
-def lsh_bucketed_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                      planes: int = 12, dim: int = 64, seed: int = 42,
-                      tables: int = 4,
-                      id_col: str = "vec_id", vec_col: str = "embedding",
-                      query_id_col: str = "query_id",
-                      multiprobe_bits: int = 1) -> DataFrame:
-    """Approximate top-k: multi-table random-hyperplane LSH + exact rerank.
-
-    ``tables`` independent hash tables of ``planes`` bits each: a candidate
-    must collide in >= 1 table (recall 1-(1-p^planes)^tables for per-bit
-    agreement p = 1 - angle/pi).  ``multiprobe_bits=1`` additionally probes
-    every Hamming-distance-1 signature per table.  The corpus index is
-    ``tables`` rows per vector — the classic memory-for-recall trade; at
-    scale, write it once with ``BucketedTap`` and reuse across query
-    batches.  High recall requires genuinely-near neighbors (near-dup
-    regime); on uniformly random vectors every LSH family degrades."""
-    sig_udf = _multi_signature_udf(dim, planes, seed, tables)
-    c = (_fan_out(corpus)
-         .select(F.col(id_col), F.col(vec_col),
-                 F.posexplode(sig_udf(F.col(vec_col))).alias("__t", "__sig")))
-    q_sigged = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"),
-                              F.posexplode(sig_udf(F.col(vec_col))).alias("__t", "__s0"))
-    if multiprobe_bits >= 1:
-        probes = F.array(F.col("__s0"),
-                         *[F.col("__s0").bitwiseXOR(F.lit(1 << i))
-                           for i in range(planes)])
-    else:
-        probes = F.array(F.col("__s0"))
-    q = (q_sigged.select(query_id_col, "__qvec", "__t",
-                         F.explode(probes).alias("__sig")))
-    sim = F.round(cosine_expr(F.col(vec_col), F.col("__qvec")), 4)
-    scored = (c.join(F.broadcast(q), ["__t", "__sig"])
-               .filter(F.col(id_col) != F.col(query_id_col))
-               .select(F.col(query_id_col), F.col(id_col), sim.alias("sim"))
-               .dropDuplicates([query_id_col, id_col]))
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
-    return (scored.withColumn("__rn", F.row_number().over(w))
-                  .filter(F.col("__rn") <= k)
-                  .drop("__rn"))
+def _lcg_planes(dim: int, planes: int, seed: int, tables: int) -> list:
+    """``tables`` LCG hyperplane matrices (dim x planes); table ``t`` is
+    seeded ``seed + 7919 * t``."""
+    return [np.array(_hyperplane(dim, seed + 7919 * t, planes),
+                     dtype=np.float64).T
+            for t in range(tables)]
 
 
 def _md5_sign_planes(tables: int, planes: int, dim: int) -> list:
@@ -169,53 +115,93 @@ def _md5_sign_planes(tables: int, planes: int, dim: int) -> list:
     return mats
 
 
-def _md5_band_udf(dim: int, planes: int, tables: int):
-    """vec -> array<string> of per-table band strings ('0'/'1' per plane,
-    bit = dot(vec, plane) >= 0).  Band strings (not packed ints) so the
-    DuckDB twin can build the same keys with string_agg."""
-    mats = _md5_sign_planes(tables, planes, dim)
+def _sign_udf(mats: list):
+    """Vectorized pandas UDF over a list of (dim x planes) hyperplane
+    matrices (:func:`_lcg_planes` or :func:`_md5_sign_planes`): vec ->
+    ``array<long>``, one packed signature per table whose bit ``p`` is
+    ``dot(vec, plane p) >= 0``.
 
-    @F.pandas_udf("array<string>")
-    def bands(v: pd.Series) -> pd.Series:
+    A Column-expression formulation would be tables*planes*dim literals —
+    Catalyst analysis/codegen on that expression tree costs more than the
+    query.  One Arrow batch + numpy matmul computes every table's signature
+    in a single pass instead."""
+    weights = (1 << np.arange(mats[0].shape[1], dtype=np.uint64))
+
+    @F.pandas_udf("array<long>")
+    def sig(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype=object)
-        M = np.stack(v.to_numpy()).astype(np.float64)
+        M = np.stack(v.to_numpy()).astype(np.float64)          # N x dim
         per_table = []
         for P in mats:
-            bits = (M @ P) >= 0
-            per_table.append(["".join(row)
-                              for row in np.where(bits, "1", "0")])
-        return pd.Series([[per_table[t][i] for t in range(tables)]
-                          for i in range(len(M))])
+            bits = (M @ P) >= 0                                # N x planes
+            per_table.append((bits.astype(np.uint64) @ weights).astype(np.int64))
+        S = np.stack(per_table, axis=1)                        # N x tables
+        return pd.Series([row.tolist() for row in S])
 
-    return bands
+    return sig
+
+
+def _lsh_topk(corpus: DataFrame, queries: DataFrame, k: int, mats: list,
+              probe_bits: int, id_col: str, vec_col: str,
+              query_id_col: str) -> DataFrame:
+    """The one LSH top-k core, for either plane family: per-table sign
+    signatures (:func:`_sign_udf`), each query also probing its
+    signature with each of the low ``probe_bits`` bits flipped, an
+    equality join on (table, signature) against the broadcast queries,
+    exact 4dp cosine rerank and the tie-broken per-query top-k."""
+    sig = _sign_udf(mats)
+    c = (_fan_out(corpus)
+         .select(F.col(id_col), F.col(vec_col),
+                 F.posexplode(sig(F.col(vec_col))).alias("__t", "__sig")))
+    probes = F.array(F.col("__s0"),
+                     *[F.col("__s0").bitwiseXOR(F.lit(1 << i))
+                       for i in range(probe_bits)])
+    q = (queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"),
+                        F.posexplode(sig(F.col(vec_col))).alias("__t", "__s0"))
+         .select(query_id_col, "__qvec", "__t",
+                 F.explode(probes).alias("__sig")))
+    sim = F.round(cosine_expr(F.col(vec_col), F.col("__qvec")), 4)
+    scored = (c.join(F.broadcast(q), ["__t", "__sig"])
+               .filter(F.col(id_col) != F.col(query_id_col))
+               .select(F.col(query_id_col), F.col(id_col), sim.alias("sim"))
+               .dropDuplicates([query_id_col, id_col]))
+    return _topk_per_query(scored, k, query_id_col, id_col)
+
+
+def lsh_bucketed_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
+                      planes: int = 12, dim: int = 64, seed: int = 42,
+                      tables: int = 4,
+                      id_col: str = "vec_id", vec_col: str = "embedding",
+                      query_id_col: str = "query_id",
+                      multiprobe_bits: int = 1) -> DataFrame:
+    """Approximate top-k: multi-table random-hyperplane LSH + exact rerank
+    (:func:`_lsh_topk` over seeded LCG planes).
+
+    ``tables`` independent hash tables of ``planes`` bits each: a candidate
+    must collide in >= 1 table (recall 1-(1-p^planes)^tables for per-bit
+    agreement p = 1 - angle/pi).  ``multiprobe_bits=1`` additionally probes
+    every Hamming-distance-1 signature per table.  The corpus index is
+    ``tables`` rows per vector — the classic memory-for-recall trade; at
+    scale, write it once with ``BucketedTap`` and reuse across query
+    batches.  High recall requires genuinely-near neighbors (near-dup
+    regime); on uniformly random vectors every LSH family degrades."""
+    return _lsh_topk(corpus, queries, k, _lcg_planes(dim, planes, seed, tables),
+                     planes if multiprobe_bits >= 1 else 0,
+                     id_col, vec_col, query_id_col)
 
 
 def lsh_bucketed_topk_md5(corpus: DataFrame, queries: DataFrame, k: int = 10,
                           planes: int = 8, dim: int = 64, tables: int = 4,
                           id_col: str = "vec_id", vec_col: str = "embedding",
                           query_id_col: str = "query_id") -> DataFrame:
-    """Deterministic cross-engine twin of :func:`lsh_bucketed_topk`: md5
-    Rademacher planes, no multiprobe — every stage (bands, candidates,
-    rounded rerank, tie-broken top-k) is reproducible in DuckDB, so the
-    correctness gate can hash-check an APPROXIMATE index end-to-end.  Same
-    scale shape as the production variant: map-only signatures, equality
-    join on (table, band), per-query top-k."""
-    band_udf = _md5_band_udf(dim, planes, tables)
-    c = (_fan_out(corpus)
-         .select(F.col(id_col), F.col(vec_col),
-                 F.posexplode(band_udf(F.col(vec_col))).alias("__t", "__band")))
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"),
-                       F.posexplode(band_udf(F.col(vec_col))).alias("__t", "__band"))
-    sim = F.round(cosine_expr(F.col(vec_col), F.col("__qvec")), 4)
-    scored = (c.join(F.broadcast(q), ["__t", "__band"])
-               .filter(F.col(id_col) != F.col(query_id_col))
-               .select(F.col(query_id_col), F.col(id_col), sim.alias("sim"))
-               .dropDuplicates([query_id_col, id_col]))
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
-    return (scored.withColumn("__rn", F.row_number().over(w))
-                  .filter(F.col("__rn") <= k)
-                  .drop("__rn"))
+    """:func:`lsh_bucketed_topk` over md5 Rademacher planes
+    (:func:`_md5_sign_planes`), no multiprobe — every stage (bands,
+    candidates, rounded rerank, tie-broken top-k) is reproducible in
+    DuckDB, so the correctness gate can hash-check an APPROXIMATE index
+    end-to-end."""
+    return _lsh_topk(corpus, queries, k, _md5_sign_planes(tables, planes, dim),
+                     0, id_col, vec_col, query_id_col)
 
 
 def ivf_topk_md5(corpus: DataFrame, queries: DataFrame, k: int = 10,
@@ -255,10 +241,7 @@ def ivf_topk_md5(corpus: DataFrame, queries: DataFrame, k: int = 10,
     scored = (assign.join(F.broadcast(probes), "__cent_id")
               .filter(F.col(id_col) != F.col(query_id_col))
               .select(F.col(query_id_col), F.col(id_col), sim.alias("sim")))
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
-    return (scored.withColumn("__rn", F.row_number().over(w))
-                  .filter(F.col("__rn") <= k)
-                  .drop("__rn"))
+    return _topk_per_query(scored, k, query_id_col, id_col)
 
 
 def hash_embed(df: DataFrame, dim: int = 64, text_col: str = "text",
@@ -498,8 +481,6 @@ def _kmeans_md5_fit(corpus: DataFrame, k: int, iterations: int,
                 f"kmeans_md5: seed vector has NULL elements — {vec_col} "
                 "must be non-null end-to-end; filter or impute first")
         cents.append([float(x) for x in r["__sv"]])
-
-    dim = len(cents[0]) if cents else 0
 
     def assign_to(c):
         return (vecs.withColumn("__best",
@@ -951,7 +932,7 @@ def embedding_dup_pairs(df: DataFrame, threshold: float = 0.95,
     else:
         # multi-table signatures via one vectorized UDF pass, reused by both
         # join sides
-        sig_udf = _multi_signature_udf(dim, seed=seed, planes=planes, tables=4)
+        sig_udf = _sign_udf(_lcg_planes(dim, planes, seed, tables=4))
         sig = (_fan_out(df)
                .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
                        F.posexplode(sig_udf(F.col(vec_col))).alias("__t", "__sig"))
@@ -1095,10 +1076,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                .filter(F.col(id_col) != F.col(query_id_col))
                .select(F.col(query_id_col), F.col(id_col), sim.alias("sim"))
                .dropDuplicates([query_id_col, id_col]))
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
-    return (scored.withColumn("__rn", F.row_number().over(w))
-                  .filter(F.col("__rn") <= k)
-                  .drop("__rn"))
+    return _topk_per_query(scored, k, query_id_col, id_col)
 
 
 # ---------------------------------------------------------------- PQ
@@ -1210,10 +1188,7 @@ def pq_topk_md5(corpus: DataFrame, queries: DataFrame, k: int = 10,
               .filter(F.col(id_col) != F.col(query_id_col))
               .groupBy(query_id_col, id_col)
               .agg(F.round(F.sum("__lv"), 4).alias("sim")))
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
-    return (scored.withColumn("__rn", F.row_number().over(w))
-                  .filter(F.col("__rn") <= k)
-                  .drop("__rn"))
+    return _topk_per_query(scored, k, query_id_col, id_col)
 
 
 def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
@@ -1293,10 +1268,7 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
               .filter(F.col(id_col) != F.col(query_id_col))
               .select(F.col(query_id_col), F.col(id_col),
                       F.round(score, 4).alias("sim")))
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
-    return (scored.withColumn("__rn", F.row_number().over(w))
-                  .filter(F.col("__rn") <= k)
-                  .drop("__rn"))
+    return _topk_per_query(scored, k, query_id_col, id_col)
 
 
 def group_centroids(df: DataFrame, group_col: str, dim: int = 64,
@@ -1515,10 +1487,7 @@ def sq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
               .filter(F.col(id_col) != F.col(query_id_col))
               .select(F.col(query_id_col), F.col(id_col),
                       F.round(cosine_expr(deq, F.col("__qvec")), 4).alias("sim")))
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
-    return (scored.withColumn("__rn", F.row_number().over(w))
-                  .filter(F.col("__rn") <= k)
-                  .drop("__rn"))
+    return _topk_per_query(scored, k, query_id_col, id_col)
 
 
 def random_project(df: DataFrame, out_dim: int = 16, dim: int = 64,
@@ -1632,7 +1601,7 @@ def margin_candidates(a: DataFrame, b: DataFrame,
                       vec_col: str = "embedding") -> DataFrame:
     """The banded-LSH candidate graph :func:`margin_mine` mines over by
     DEFAULT: ``(id_a, id_b)`` pairs sharing an md5-Rademacher band
-    (:func:`_md5_band_udf` — ``tables`` tables of ``planes`` sign bits)
+    (:func:`_md5_sign_planes` — ``tables`` tables of ``planes`` sign bits)
     in at least one table.
 
     Scale shape: two map-only signature passes + one equality join on
@@ -1641,7 +1610,7 @@ def margin_candidates(a: DataFrame, b: DataFrame,
     md5 family, so a SQL gate replays the identical candidate set.
     Exposed so callers can materialize/write the graph once and feed it
     back as ``candidates=`` across many mining runs."""
-    band_udf = _md5_band_udf(dim, planes, tables)
+    band_udf = _sign_udf(_md5_sign_planes(tables, planes, dim))
     sa = (_fan_out(a)
           .select(F.col(id_col).alias("id_a"),
                   F.posexplode(band_udf(F.col(vec_col)))
@@ -1683,7 +1652,7 @@ def margin_mine(a: DataFrame, b: DataFrame, k: int = 4,
 
     Scale shape — the DEFAULT is banded, never a cross join: with no
     ``candidates`` the operator builds its own candidate graph from the
-    md5-Rademacher band family (:func:`_md5_band_udf` — ``tables``
+    md5-Rademacher band family (:func:`_md5_sign_planes` — ``tables``
     tables of ``planes`` sign bits; a pair is a candidate iff it shares
     a band in >= 1 table), so the heavy side is two map-only signature
     passes plus equality joins on (table, band) — no CartesianProduct
@@ -1716,7 +1685,7 @@ def margin_mine(a: DataFrame, b: DataFrame, k: int = 4,
         # pytest-pinned)
         fa = fa.localCheckpoint(eager=False)
         fb = fb.localCheckpoint(eager=False)
-        band_udf = _md5_band_udf(dim, planes, tables)
+        band_udf = _sign_udf(_md5_sign_planes(tables, planes, dim))
         sa = fa.select("id_a", F.posexplode(band_udf(F.col("__va")))
                        .alias("__t", "__band"))
         sb = fb.select("id_b", F.posexplode(band_udf(F.col("__vb")))

@@ -23,18 +23,6 @@ from __future__ import annotations
 from typing import Sequence, Union
 
 
-class _FieldsKind:
-    """Marker singleton for positional/semantic selectors."""
-
-    __slots__ = ("name",)
-
-    def __init__(self, name: str) -> None:
-        self.name = name
-
-    def __repr__(self) -> str:  # pragma: no cover - debug aid
-        return f"Fields.{self.name}"
-
-
 class Fields:
     """Ordered, optionally-typed list of field names, plus selector kinds.
 

@@ -469,10 +469,6 @@ def _aggregate_by(previous, group_fields, agg: Aggregator, name: str) -> Pipe:
     return Every(g, Fields.coerce(agg._argument_fields), agg, Fields.ALL)
 
 
-class _ArgAgg:
-    """Helper mixin carrying the argument selector for the *By sugar."""
-
-
 def CountBy(previous: Pipe, group_fields, count_field: str) -> Pipe:
     a = Count(count_field)
     a._argument_fields = Fields.NONE

@@ -743,8 +743,9 @@ def stream_embedding_gate(stream: DataFrame, reference: DataFrame,
     every bucket candidate is verified by exact cosine, so precision is
     exact.  At 100 TB the reference band table is precomputed once and
     reused across the whole ingest."""
-    from ..extensions.similarity import _md5_band_udf, cosine_expr
-    band = _md5_band_udf(dim, planes, tables=1)
+    from ..extensions.similarity import (_md5_sign_planes, _sign_udf,
+                                         cosine_expr)
+    band = _sign_udf(_md5_sign_planes(1, planes, dim))
     ref = (reference.select(F.col(vec_col).alias("__rvec"),
                             band(F.col(vec_col)).getItem(0).alias("__rband")))
     s = stream.withColumn("__sband", band(F.col(vec_col)).getItem(0))
@@ -912,7 +913,7 @@ def stream_media_dedup(stream: DataFrame, ts_col: str = "ts",
        stream-static LEFT ANTI equi-joins, one per ``nbits/bands``-wide
        sub-band, each verifying the full Hamming distance in its join
        condition — EXACT by the same pigeonhole argument as
-       :func:`...multimodal.hamming_pairs` (a pair within ``max_hamming``
+       :func:`...dedup.hamming_pairs` (a pair within ``max_hamming``
        has at least one clean sub-band when ``bands > max_hamming``), and
        a chain of anti-joins drops a row matched by ANY band, so the
        union-of-matches semantics needs no state.  The reference sides

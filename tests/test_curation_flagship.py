@@ -228,3 +228,22 @@ def test_dupspan_stage_opt_in(spark):
     # default path: no dupspan_kwargs -> no despanned stage, licence stays
     _, st_d = _curate(docs, bench, return_stages=True)
     assert "despanned" not in st_d
+
+
+def test_gate_barrier_stays_above_fan_out_exchange(spark, sf_dir):
+    """Plan pin for the stage-1/2 gate of curation_flagship: the
+    ``_no_push`` gate Filter must stay ABOVE the round-robin fan-out
+    Exchange, so the clean/gate regex chain runs on the fanned-out
+    partitions, and no clean_text regex may reach a scan-side filter
+    (pushed through the exchange it runs in the single scan task)."""
+    import __spark_entry__ as entry
+    _, stages = entry._curate_flagship(entry._flagship_docs(spark, sf_dir),
+                                       True, return_stages=True)
+    lines = (stages["gated"]._jdf.queryExecution().executedPlan()
+             .toString().splitlines())
+    gate = [i for i, ln in enumerate(lines)
+            if "Filter" in ln and "rand(0)" in ln]
+    exch = [i for i, ln in enumerate(lines)
+            if "Exchange RoundRobinPartitioning" in ln]
+    assert gate and exch and gate[0] < exch[0], "\n".join(lines)[:3000]
+    assert not any("regexp_replace" in ln for ln in lines[exch[0]:])

@@ -1,5 +1,6 @@
-"""md5 cross-engine twins of the MinHash/SimHash fast paths, and the
-short-document shingle guard (docs with < n tokens must emit ZERO shingles,
+"""The md5 and fast hash families of the MinHash/SimHash operators
+(one pair core each, so the families differ only in their hash
+expressions), and the short-document shingle guard (docs with < n tokens must emit ZERO shingles,
 matching the DuckDB oracles)."""
 
 from __future__ import annotations
@@ -93,6 +94,40 @@ def test_simhash_md5_runs_and_orders_pairs(spark, docs):
     fast0 = {(r["id_a"], r["id_b"]) for r in
              simhash_dup_pairs(docs, max_hamming=0).collect()}
     assert truth <= md50 and truth <= fast0
+
+
+@pytest.mark.parametrize("family", ["xxhash64", "md5"])
+def test_minhash_verify_threshold_edge(spark, family):
+    """One integer threshold rule for both hash families: keep a pair iff
+    ``agree >= ceil(t * n)``.  At n=3, t=0.33333 that is agree >= 1 —
+    the old xxhash64 rule ``round(agree/n, 4) >= t`` dropped agree=1
+    (0.3333 < 0.33333).  Hand-built banded signatures: pair (2k+1, 2k+2)
+    agrees in exactly k of 3 positions and owns band key k, so it is
+    the only candidate of its band."""
+    from cascading_flink_spark.extensions.dedup import _minhash_verify
+
+    def v(x):
+        return x if family == "xxhash64" else f"{x:032x}"
+
+    rows = []
+    for agree in range(4):
+        a = [v(100 * agree + i) for i in range(3)]
+        b = [a[i] if i < agree else v(100 * agree + 50 + i)
+             for i in range(3)]
+        rows += [(2 * agree + 1, a, 0, v(agree)),
+                 (2 * agree + 2, b, 0, v(agree))]
+    t = "bigint" if family == "xxhash64" else "string"
+    banded = spark.createDataFrame(
+        rows, f"id long, sig array<{t}>, band int, bh {t}")
+    got = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in
+           _minhash_verify(banded, banded, 3, 0.33333).collect()}
+    assert got == {(3, 4): 0.3333, (5, 6): 0.6667, (7, 8): 1.0}
+    # the cross-corpus spelling (dedup_against) keeps the same pairs
+    left = banded.filter("id % 2 = 1")
+    right = banded.filter("id % 2 = 0")
+    cross = {r["id_a"] for r in _minhash_verify(
+        left, right, 3, 0.33333, oriented=False).collect()}
+    assert cross == {3, 5, 7}
 
 
 # ---------------------------------------------------------- dedup_against
