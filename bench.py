@@ -143,277 +143,10 @@ FAST_QUERIES = [
     "curation_despan", "curation_dsir", "curation_margin",
 ]
 
-# Headline set: the scan/agg, join-pipeline, window, UDF and training-data
-# paths.  embedding_dups uses the LSH (scale) variant here — the exact
-# all-pairs variant is for the sf0.01 correctness gate only.
-BENCH_QUERIES = [
-    # round 14: the consolidation scorecards (replace the retired
-    # singles kripp/judge_kappa/fleiss, psi/chi2/jsd/ks_drift/w1_drift,
-    # mrr/recall/precision/ndcg_lsh in this list — each scorecard runs
-    # every member recipe plus the joins, so per-query rows are NOT
-    # comparable to the singles' rows; totals shrink by the 12-to-3
-    # fold)
-    "agreement_scorecard",
-    "drift_scorecard",
-    "retrieval_scorecard",
-    # round 13
-    "dup_partners",
-    # round 12
-    "dup_substrings",
-    "strip_dup_substrings",
-    "dup_rate",
-    "classifier_auc_quantized",
-    "calibration_bins",
-    "calibration_ece",
-    "pr_curve",
-    "label_agreement",
-    "edit_dups",
-    "pearson_signals",
-    "spearman_signals",
-    "confusion",
-    "mmr",
-    "rbo",
-    "concentration",
-    "eccentricity",
-    "lang_confusion",
-    "trimmed_stats",
-    "avg_precision",
-    "rate_confidence",
-    "diversity",
-    "zipf",
-    "vocab_overlap",
-    "assortativity",
-    "mean_confidence",
-    "harmonic",
-    "mrl_recall",
-    "silhouette",
-    "drift_series",
-    "readability",
-    "data_card",
-    "robust_spread",
-    # round 11
-    "connected_components_fast",
-    "rrf_hybrid3",
-    "session_funnel",
-    "kcenter",
-    "ngram_containment",
-    "topic_quota",
-    "classifier_auc",
-    "upsample_mixture",
-    "clustering_coef",
-    "dedup_soft",
-    # round 10
-    "bfs_distances",
-    "rrf_hybrid",
-    "session_labels",
-    "session_stats",
-    "session_transitions",
-    "hard_negatives",
-    "cluster_split",
-    "connected_components",
-    "link_candidates",
-    "quantile_norm_lang",
-    "quantile_norm_global",
-    "corpus_drift",
-    "corpus_drift_ref",
-    "weighted_sample",
-    "weighted_sample_lang",
-    "pagerank_dangling",
-    "dsir_mixture",
-    "curation_margin",
-    "label_prop",
-    "k_core",
-    # round 9
-    "dsir_weights",
-    "dsir_select",
-    "dsir_sample",
-    "pagerank",
-    "pagerank_ppr",
-    "hits",
-    "decontam_spans",
-    "strip_spans_against",
-    "curation_dsir",
-    "margin_mine",
-    "triangle_count",
-    "cohort_retention",
-    "groupby_agg",
-    "nary_join",
-    "hashjoin_broadcast",
-    "topk_per_group",
-    "wordcount",
-    "window_agg_events",
-    "countby_events",
-    "dedup_exact",
-    "text_quality",
-    "ngram_jaccard",
-    "minhash_lsh",
-    "simhash",
-    "dedup_clusters",
-    "ann_topk",
-    "ann_ivf",
-    "buffer_span",
-    "rollup",
-    "semi_join",
-    "salted_agg",
-    "token_budget",
-    # round-3 additions — totals are NOT comparable to BENCH_r02's 20-query
-    # set; compare per-query
-    "tpch_q3",
-    "repetition_stats",
-    "tfidf_topterms",
-    "unigram_commonness",
-    "ann_pq",
-    # round-5 additions (again: compare per-query across rounds, not totals)
-    "tpch_q1",
-    "tpch_q18",
-    "tpch_q6",
-    "tpch_q10",
-    "asof_join",
-    "range_join",
-    "decontaminate",
-    "winnow_clusters",
-    "event_funnel",
-    "group_quantiles",
-    "tpch_q13",
-    "tpch_q14",
-    "bm25",
-    "domain_quota",
-    "token_mixture",
-    "shuffle_shard",
-    "ngram_counts",
-    "inverted_index",
-    "group_centroids",
-    # round-6 additions — the previously-unbenched risk surface (VERDICT r5
-    # Next #3): the Python-runtime join, the n-ary outer-join family, the
-    # windowed dedup resolution, and the md5-twin ANN path.  As with r3/r5
-    # set changes: compare per-query across rounds, not totals.
-    "bufferjoin",
-    "nary_right_join",
-    "nary_mixed_join",
-    "dedup_keep_best",
-    "value_histogram",
-    "argmin_join",
-    "ann_lsh",
-    "tpch_q21",
-    # round-6 TPC-H widening: Q4/Q5/Q7/Q12/Q15/Q17/Q19/Q22 through the DSL
-    "tpch_q4",
-    "tpch_q5",
-    "tpch_q7",
-    "tpch_q12",
-    "tpch_q15",
-    "tpch_q17",
-    "tpch_q19",
-    "tpch_q22",
-    "tpch_q2",
-    "tpch_q8",
-    "tpch_q9",
-    "tpch_q11",
-    "tpch_q16",
-    "tpch_q20",
-    "paragraph_dedup",
-    "bigram_lm",
-    "semdedup",
-    "group_quantiles_binned",
-    "corpus_report",
-    # remaining regex/Arrow-heavy curation paths with no bench row yet —
-    # the last perf blind spots with non-trivial per-row cost
-    "chunk_corpus",
-    "redact_pii",
-    "strip_boilerplate",
-    "curation_pipeline",
-    "winnow_pairs",
-    "lang_id",
-    "sessionize",
-    "stratified_sample",
-    # round-6 session-2 operators (set change: 79 -> 83 rows; totals are
-    # not comparable to earlier rounds — compare per-query)
-    "temperature_mixture",
-    "gopher_quality",
-    "blocklist",
-    "rolling_stats",
-    # round-6 session-3 operators (set change: 83 -> 95 rows + the
-    # embedding_dups_lsh extra = 96 total; totals are not comparable to
-    # earlier rounds — compare per-query)
-    "sq_codes",
-    "sq_topk",
-    "overlap_chunks",
-    "url_normalize",
-    "url_dedup",
-    "dedup_against",
-    "random_project",
-    "oov_stats",
-    "hot_keys",
-    "compression_stats",
-    "clean_text",
-    "bpe_fertility",
-    "group_split",
-    # round-7 additions (set change: 96 -> 127 rows; totals are not
-    # comparable to earlier rounds — compare per-query).  The two new
-    # round-7 operators, then the last 29 previously-unbenched queries —
-    # the thin relational/expression paths left out of earlier rounds
-    # because their cost is dominated by the shared scan/shuffle
-    # machinery already measured elsewhere; benched now so no declared
-    # query lacks a perf row.  `embedding_dups` itself stays excluded by
-    # design: its queries() entry is the exact all-pairs O(n^2)
-    # correctness variant, benched as embedding_dups_lsh (the scale
-    # path).  curation_flagship runs here with the xxhash64 near-dup
-    # stage (use_md5=False override below), the production variant; its
-    # md5 twin is the correctness-gate spelling.
-    "curation_flagship",
-    "quality_classifier",
-    "temperature_budgets",
-    "multimodal_meta",
-    "ann_recall",
-    "pivot",
-    "ungroup",
-    "sample",
-    "quality_filter",
-    "fingerprint",
-    "anti_join",
-    "nary_outer_join",
-    "mixed_join",
-    "cross_join",
-    "self_join",
-    "merge_union",
-    "unique",
-    "global_sort_limit",
-    "intersect",
-    "except",
-    "logic_filters",
-    "retain_coerce",
-    "hashjoin_cross",
-    "token_stats_by_lang",
-    "cogroup_inner",
-    "cogroup_left",
-    "cogroup_outer",
-    "date_format",
-    "expression_filter",
-    "regex_parse",
-    # heavy_hitters + pack_bins land after the 127-row validation run
-    # (127 -> 129)
-    "heavy_hitters",
-    "pack_bins",
-    # round-7 session-4 additions (129 -> 136)
-    "c4_rules",
-    "sample_k_per_group",
-    "cardinality_report",
-    "dup_spans",
-    "strip_dup_spans",
-    "gram_novelty",
-    "minhash_recall",
-    # round-8 additions (136 -> 142)
-    "image_dups",
-    "curation_despan",
-    "audio_dups",
-    "video_dups",
-    "image_resize",
-    "frame_sample",
-    # round-8 session-2 additions (142 -> 145)
-    "kmeans",
-    "decontaminate_bloom",
-    "curriculum",
-    "hash_embed",
-]
+# Headline set: every registry query.  embedding_dups runs as its LSH
+# (scale) variant, embedding_dups_lsh, below — the exact all-pairs
+# variant is for the sf0.01 correctness gate only.
+BENCH_QUERIES = [n for n in entry.queries() if n != "embedding_dups"]
 
 
 def _execute(df) -> None:
@@ -459,14 +192,19 @@ def main() -> None:
     qs["embedding_dups_lsh"] = lambda s, d: embedding_dup_pairs(
         entry._t(s, d, "embeddings"), threshold=0.4, exact=False)
     # ann_ivf at bench scale: the Lloyd-trained production path (queries()
-    # carries the md5 cross-engine twin for the correctness gate).
+    # carries the md5-seeded twin the oracle replays).  Lloyd training is
+    # why both exist: at n_probe=6 it recalls 0.76 of the exact cosine
+    # top-10 against the md5 twin's 0.59 (sf0.001, 10 queries; pinned by
+    # tests/test_similarity.py::test_lloyd_twins_recall_at_least_md5_seeded).
     qs["ann_ivf"] = lambda s, d: ivf_topk(
         entry._t(s, d, "embeddings"),
         entry._t(s, d, "embeddings").filter("vec_id < 5")
              .selectExpr("vec_id as query_id", "embedding"),
         k=10, n_centroids=16, n_probe=4)
     # semdedup at bench scale: the Lloyd-trained production path (queries()
-    # carries the md5 cross-engine twin for the correctness gate).
+    # carries the md5-seeded twin the oracle replays).  Trained cells keep
+    # more near-dup pairs together: 0.24 of the exact all-pairs set at
+    # threshold 0.3 against the md5 twin's 0.20 (sf0.001, 16 clusters).
     qs["semdedup"] = lambda s, d: semdedup_pairs(
         entry._t(s, d, "embeddings"), threshold=0.3, n_clusters=16)
     # margin_mine: no bench override any more — the operator's DEFAULT
@@ -474,7 +212,9 @@ def main() -> None:
     # CartesianProduct), so queries()'s gate spelling IS the production
     # path and the bench measures it directly.
     # ann_pq at bench scale: the Lloyd-trained production path (queries()
-    # carries the md5 cross-engine twin for the correctness gate).
+    # carries the md5-seeded twin the oracle replays).  Trained codebooks
+    # recall 0.79 of the exact cosine top-10 against the md5 twin's 0.62
+    # at m=32/ksub=32 (sf0.001, 10 queries; pinned by the same test).
     qs["ann_pq"] = lambda s, d: pq_topk(
         entry._t(s, d, "embeddings"),
         entry._t(s, d, "embeddings").filter("vec_id < 5")

@@ -205,26 +205,13 @@ def _contaminated_positions(corpus: DataFrame, reference: DataFrame,
         # every document "contaminated", the whole corpus silently
         # stripped to '' instead of an error
         raise ValueError("k must be >= 1")
-    from .dedup import _fan_out, _span_toks
-
-    def gram_stream(df, tcol, icol):
-        toks = _span_toks(tcol)
-        n = F.size(toks)
-        pos_arr = (F.when(n >= k, F.sequence(F.lit(0),
-                                             F.greatest(n - k, F.lit(0))))
-                   .otherwise(F.array().cast("array<int>")))
-        return (df.select(F.col(icol).alias("id"), toks.alias("t"),
-                          F.explode(pos_arr).alias("pos"))
-                  .select("id", "pos",
-                          F.md5(F.concat_ws(
-                              " ", F.slice(F.col("t"), F.col("pos") + 1,
-                                           k))).alias("g")))
-
-    ref_grams = (gram_stream(reference, ref_text_col, ref_id_col)
+    from .dedup import _fan_out, _gram_windows, _span_toks
+    ref_grams = (_gram_windows(reference, ref_id_col,
+                               _span_toks(ref_text_col), k)
                  .select("g").distinct())
     if broadcast_ref:
         ref_grams = F.broadcast(ref_grams)
-    return (gram_stream(_fan_out(corpus), text_col, id_col)
+    return (_gram_windows(_fan_out(corpus), id_col, _span_toks(text_col), k)
             .join(ref_grams, "g")
             .select("id", "pos"))
 
@@ -246,29 +233,18 @@ def contamination_spans(corpus: DataFrame, reference: DataFrame,
     Returns ``(doc_id, span_start, span_end, span_tokens, n_grams)``,
     positions 0-based inclusive; overlapping/touching contaminated
     k-grams merge into one span (gaps-and-islands in per-doc position
-    order, the :func:`~.dedup.dup_spans` island rule).
+    order, the :func:`~.dedup._islands` rule of the dup-span family).
 
     Scale shape (100 TB): the corpus never shuffles before the gram
     probe (broadcast reference gram set); the island window sorts only
     each doc's CONTAMINATED positions — bounded by doc length and by
     true contamination, never by corpus size.  Output-bound, like the
     whole dup-span family."""
-    from pyspark.sql import Window
+    from .dedup import _islands
     hits = _contaminated_positions(corpus, reference, k, text_col, id_col,
                                    ref_text_col or text_col,
                                    ref_id_col or id_col, broadcast_ref)
-    w = Window.partitionBy("id").orderBy("pos")
-    brk = F.when(F.col("pos") > F.lag("pos").over(w) + k, 1).otherwise(0)
-    islands = (hits.withColumn("__brk", brk)
-               .withColumn("__isl", F.sum("__brk").over(
-                   w.rowsBetween(Window.unboundedPreceding, 0))))
-    return (islands.groupBy("id", "__isl")
-            .agg(F.min("pos").alias("span_start"),
-                 (F.max("pos") + (k - 1)).alias("span_end"),
-                 (F.max("pos") - F.min("pos") + k).alias("span_tokens"),
-                 F.count(F.lit(1)).alias("n_grams"))
-            .select(F.col("id").alias(id_col), "span_start", "span_end",
-                    "span_tokens", "n_grams"))
+    return _islands(hits, k, id_col)
 
 
 def strip_spans_against(corpus: DataFrame, reference: DataFrame,
@@ -303,10 +279,8 @@ def strip_spans_against(corpus: DataFrame, reference: DataFrame,
     hits = _contaminated_positions(corpus, reference, k, text_col, id_col,
                                    ref_text_col or text_col,
                                    ref_id_col or id_col, broadcast_ref)
-    removed = hits.select("id", F.explode(
-        F.sequence(F.col("pos"), F.col("pos") + (k - 1))).alias("ti"))
     base = (_fan_out(corpus)
             .select(F.col(id_col).alias("id"),
                     _span_toks(text_col, lowered=False).alias("t")))
-    return _strip_rebuild(base, removed, id_col,
+    return _strip_rebuild(base, hits, k, id_col,
                           "n_tokens_kept", "n_tokens_removed")

@@ -17,6 +17,15 @@ Scale design notes (the 100 TB story):
   on 16-bit chunks (pigeonhole: distance<=3 pairs share at least one of 4
   chunks) again avoids all-pairs.
 
+The exact text-dedup families share one private core per stage:
+:func:`_collapse_verbatim` / :func:`_expand_members` (the verbatim-copy
+collapse and member expansion of the Jaccard, containment and
+edit-distance pair operators), :func:`_ranked_shingles` /
+:func:`_hashed_sets` (the PPJoin index and xxhash64 verify sets of the
+two shingle-set operators), :func:`_gram_windows` (the md5 k-token window
+stream of the dup-span, strip, novelty and span-decontamination
+operators) and :func:`_islands` (their gaps-and-islands span merge).
+
 All operators are pure DataFrame transformations.  MinHash and SimHash
 each have ONE pair core with two hash families: a fast one (xxhash64 /
 blake2b) and an md5 one that DuckDB reproduces bit-for-bit.  The
@@ -276,17 +285,169 @@ def _collapse_effective(df: DataFrame, probe_col: Column,
     return n > d and (n - d) >= _COLLAPSE_AUTO_MIN_FRAC * n
 
 
+def _collapse_verbatim(df: DataFrame, gk: Column, pin_keyed: bool = False
+                       ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The verbatim-copy collapse of the exact pair family
+    (:func:`ngram_jaccard_pairs`, :func:`ngram_containment_pairs`,
+    :func:`edit_dup_pairs`): rows of ``df`` (an ``id`` column plus the
+    payload) with equal group key ``gk`` are verbatim copies, so the
+    pair pipeline runs once per REPRESENTATIVE (the group's min id) and
+    :func:`_expand_members` expands the verdicts back to member pairs —
+    bit-identical to the raw path, because identical inputs give
+    identical verdicts.  On verbatim-dup-dense corpora (the adversarial
+    replicate rows) this removes the multiplicity^2 per-member verify.
+
+    Returns ``(rep_df, members (id, __rid), reps (__gk, __rid,
+    __gsz))``; ``rep_df`` has ``df``'s columns.  ``gk`` is an md5 +
+    length key (md5 of the 0x1f-joined shingle sequence — tokens are
+    \\s+-split, so the joiner cannot collide with token text — or of
+    the text).  Only the key rides the shuffles: representatives
+    re-acquire their payload through the ``id == __rid`` filter, not a
+    ``first()`` agg that would shuffle every copy's full payload.
+    ``pin_keyed`` pins the keyed frame when ``df`` is not already a
+    pin (its three consumers would otherwise re-read the input and
+    re-hash every row).
+
+    The operators' ``collapse_exact`` tri-state (default ``'auto'``,
+    round 13) picks the path through :func:`_collapse_effective`:
+    ``'auto'`` runs its probe EAGERLY at construction time — calling the
+    builder launches one small Spark job before any action on the
+    returned frame (ADVICE r13) — and collapses only when verbatim
+    copies reach :data:`_COLLAPSE_AUTO_MIN_FRAC` of rows (e.g. not on a
+    production corpus after exact_dedup, where the collapse is pure
+    overhead).  ``True`` forces the collapse and ``False`` is the raw
+    per-member opt-out (the pre-r12 plan); both stay fully lazy."""
+    keyed = df.withColumn("__gk", gk)
+    if pin_keyed:
+        keyed = keyed.localCheckpoint(eager=False)
+    reps = (keyed.groupBy("__gk")
+            .agg(F.min("id").alias("__rid"),
+                 F.count(F.lit(1)).alias("__gsz"))
+            .localCheckpoint(eager=False))
+    members = (keyed.select("id", "__gk")
+               .join(reps.select("__gk", "__rid"), "__gk")
+               .select("id", "__rid")
+               .localCheckpoint(eager=False))
+    rep_df = (keyed.join(reps.select("__gk", "__rid"), "__gk")
+              .filter(F.col("id") == F.col("__rid"))
+              .select(*df.columns)
+              .localCheckpoint(eager=False))
+    return rep_df, members, reps
+
+
+def _sh_key() -> Column:
+    """:func:`_collapse_verbatim` group key of a shingle array ``sh``."""
+    return F.concat(F.md5(F.concat_ws("\x1f", "sh")),
+                    F.lit("#"), F.size("sh").cast("string"))
+
+
+def _expand_members(verified: DataFrame, members: DataFrame,
+                    within: DataFrame, symmetric: bool) -> DataFrame:
+    """Expand representative verdicts ``(id_a, id_b, verdict...)`` of a
+    :func:`_collapse_verbatim` run back to member pairs.
+
+    Cross-group member pairs inherit their representatives' verdict;
+    a symmetric relation re-orients them ``least``/``greatest``
+    (members of different groups interleave in id order), a directed
+    one (containment) keeps ``(a, b)`` as verified.  Within-group pairs
+    (exact copies of each other) come from ``within``, one
+    ``(__rid, verdict...)`` row per group that qualifies, expanded over
+    every member pair: ``id_a < id_b`` when symmetric, every ordered
+    pair otherwise.  Output-bound: only TRUE pairs materialize, no
+    per-member verify."""
+    # PIN the representative verdicts BEFORE the member expansion:
+    # without it Catalyst's projection collapse inlines the verify
+    # expression past the expansion joins and re-evaluates it once per
+    # MEMBER pair whenever the expansion side broadcasts (no exchange
+    # to materialize the projection) — measured on edit_dup_pairs'
+    # levenshtein, 141.9s vs 2.8s for the 32x replicate's 254k
+    # expanded rows
+    verified = verified.localCheckpoint(eager=False)
+    out = [c for c in verified.columns if c not in ("id_a", "id_b")]
+    a, b = ("__ma", "__mb") if symmetric else ("id_a", "id_b")
+    cross = (verified
+             .withColumnRenamed("id_a", "__ra")
+             .withColumnRenamed("id_b", "__rb")
+             .join(members.toDF(a, "__ra"), "__ra")
+             .join(members.toDF(b, "__rb"), "__rb"))
+    if symmetric:
+        cross = cross.select(F.least(a, b).alias("id_a"),
+                             F.greatest(a, b).alias("id_b"), *out)
+    else:
+        cross = cross.select("id_a", "id_b", *out)
+    pair_ok = (F.col("id_a") < F.col("id_b")) if symmetric \
+        else (F.col("id_a") != F.col("id_b"))
+    copies = (within
+              .join(members.toDF("id_a", "__rid"), "__rid")
+              .join(members.toDF("id_b", "__rid"), "__rid")
+              .filter(pair_ok)
+              .select("id_a", "id_b", *out))
+    return cross.unionByName(copies)
+
+
+def _ranked_shingles(shingled: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The PPJoin index of the set-similarity pair family over a pinned
+    ``(id, sh)`` frame: ``inv (id, n_sh, shingle)`` — one row per
+    distinct shingle, ``n_sh`` riding the explode projection (``sh`` is
+    already distinct, so ``size(sh)`` is the per-id row count a
+    count-over-partition window would recompute: one WindowExec pass
+    saved, same exchange) — and ``ranked``, ``inv`` plus the shingle's
+    document frequency ``f`` and its rank ``rn`` in each doc under ONE
+    global total order (``f`` asc, shingle asc: strict, since shingles
+    are distinct per doc)."""
+    inv = shingled.select("id", F.size("sh").alias("n_sh"),
+                          F.explode("sh").alias("shingle"))
+    freq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("f"))
+    w = Window.partitionBy("id").orderBy(F.asc("f"), F.asc("shingle"))
+    ranked = (inv.join(freq, "shingle")
+              .withColumn("rn", F.row_number().over(w)))
+    return inv, ranked
+
+
+def _hashed_sets(shingled: DataFrame) -> DataFrame:
+    """Pinned per-doc ``(id, __n, __hs)``: shingle count and the
+    xxhash64 array the pair family verifies over.
+
+    Verify over xxhash64 ARRAYS, not shingle strings (round 14, guide
+    §2.3 narrower types): the per-candidate array_intersect builds a
+    hash set of |a|+|b| elements — on 8-byte longs it measured 3.5x
+    cheaper than on ~27-byte shingle strings (containment: 8.86s ->
+    2.55s over the same candidate set, results identical), and the
+    candidate joins ship long arrays instead of string arrays.  |A∩B|
+    over hashes equals |A∩B| over shingles unless xxhash64 collides
+    inside one document's ~10^2-shingle set (~1e-16 per doc) — the
+    repo's accepted md5/xxhash64 key collision class (hashed-window
+    span counting, band keys).  Hashed once per DOC on a pinned frame:
+    inline it would re-evaluate per CANDIDATE row (the r12
+    expansion-join pathology)."""
+    return (shingled.select(
+        "id", F.size("sh").alias("__n"),
+        F.transform("sh", lambda s: F.xxhash64(s)).alias("__hs"))
+        .localCheckpoint(eager=False))
+
+
 def shingle_frame(df: DataFrame, n: int = 3, text_col: str = "text",
                   id_col: str = "doc_id") -> DataFrame:
     """Canonical PINNED ``(id, sh)`` distinct-word-shingle frame of the
-    set-similarity family — the exact frame :func:`ngram_jaccard_pairs`
-    builds internally (Arrow shingler + ``localCheckpoint``), exposed so
+    set-similarity family — the frame :func:`ngram_jaccard_pairs` and
+    :func:`ngram_containment_pairs` build on (Arrow shingler +
+    ``localCheckpoint``), exposed so
     a caller composing SEVERAL shingle consumers over the same corpus
     (e.g. the exact-Jaccard truth side and the md5 MinHash banding of
     the ``minhash_recall`` evidence query) can shingle ONCE and pass the
     frame to each via their ``_shingled`` parameter.  Rows with fewer
     than ``n`` tokens carry an EMPTY array (consumers filter as their
     contract requires)."""
+    # Arrow shingler: the vectorized Python loop beats the interpreted
+    # native transform(sequence, slice+concat_ws) even with the persisted
+    # frame reused across branches (re-measured round 5: 2.8s -> 2.3s at
+    # sf0.1; output verified identical in test_shingle_udf_matches_native)
+    # Pin the shingle frame BEFORE deriving anything from it: unlike
+    # persist(), localCheckpoint substitutes no plans in a registry —
+    # only frames built FROM the checkpointed object read the blocks, so
+    # deriving `inv` first would recompute the Arrow shingler for the
+    # whole prefix branch (measured: the r9 hygiene sweep's 1.5x
+    # dedup_clusters/keep_best regression was exactly this ordering).
     return (_fan_out(df)
             .select(F.col(id_col).alias("id"),
                     _word_shingles_arrow(text_col, n).alias("sh"))
@@ -312,42 +473,12 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     O(candidates), and the rarest-first ordering removes the skewed hot keys
     entirely.
 
-    ``collapse_exact`` (default ``'auto'``, round 13): identical
-    shingle sequences collapse to one representative before the
-    prefix self-join, the O(|a|+|b|) intersect verify runs once per
-    REPRESENTATIVE pair, and member pairs expand back through two
-    hash joins — bit-identical output (cross-group pairs inherit the
-    representative's jaccard, re-oriented least/greatest; exact
-    copies of each other are jaccard-1.0 pairs emitted straight from
-    the groups).  On verbatim-dup-dense corpora (the adversarial
-    replicate rows) this removes the multiplicity^2 per-member
-    verify.  ``'auto'`` first runs ONE 2-value probe aggregate
-    (``count(*)`` vs ``count(distinct xxhash64(sh))`` over the
-    already-pinned shingle frame — a cheap single-pass fingerprint, a
-    1-row driver pull bounded by construction) and SKIPS the
-    representative group+expand machinery unless verbatim copies
-    reach :data:`_COLLAPSE_AUTO_MIN_FRAC` of rows — below that
-    (e.g. the common production corpus after exact_dedup, or a
-    handful of stray copies) the collapse was measured as pure
-    overhead (1.26-1.47x on the sf0.1 dedup compositions, VERDICT
-    r12), while the dup-dense adversarial replicates engage it.
-    ``True`` forces the collapse unconditionally;
-    ``collapse_exact=False`` is the raw pre-r12 opt-out.
-
-    NOTE (ADVICE r13): under ``'auto'`` that probe aggregate runs
-    EAGERLY at construction time — calling this builder launches one
-    small Spark job before any action on the returned frame (``True``
-    / ``False`` stay fully lazy)."""
-    # Arrow shingler: the vectorized Python loop beats the interpreted
-    # native transform(sequence, slice+concat_ws) even with the persisted
-    # frame reused across branches (re-measured round 5: 2.8s -> 2.3s at
-    # sf0.1; output verified identical in test_shingle_udf_matches_native)
-    # Pin the shingle frame BEFORE deriving anything from it: unlike
-    # persist(), localCheckpoint substitutes no plans in a registry —
-    # only frames built FROM the checkpointed object read the blocks, so
-    # deriving `inv` first would recompute the Arrow shingler for the
-    # whole prefix branch (measured: the r9 hygiene sweep's 1.5x
-    # dedup_clusters/keep_best regression was exactly this ordering).
+    ``collapse_exact`` (``'auto'`` / ``True`` / ``False``, see
+    :func:`_collapse_verbatim`): identical shingle sequences collapse
+    to one representative before the prefix self-join, so the
+    intersect verify runs once per REPRESENTATIVE pair; cross-group
+    member pairs inherit the representative's jaccard, and exact
+    copies of each other are jaccard-1.0 pairs."""
     # _shingled: a caller-supplied :func:`shingle_frame` (already
     # pinned) — lets compositions that consume the shingles twice
     # (minhash_recall's truth + banding sides) pay the Arrow pass once.
@@ -355,30 +486,8 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
         shingle_frame(df, n=n, text_col=text_col, id_col=id_col)
     members = reps = None
     if _collapse_effective(shingled, F.xxhash64("sh"), collapse_exact):
-        keyed = shingled.withColumn(
-            "__gk", F.concat(F.md5(F.concat_ws("\x1f", "sh")),
-                             F.lit("#"), F.size("sh").cast("string")))
-        reps = (keyed.groupBy("__gk")
-                .agg(F.min("id").alias("__rid"),
-                     F.count(F.lit(1)).alias("__gsz"))
-                .localCheckpoint(eager=False))
-        members = (keyed.select("id", "__gk")
-                   .join(reps.select("__gk", "__rid"), "__gk")
-                   .select("id", "__rid")
-                   .localCheckpoint(eager=False))
-        shingled = (keyed.join(reps.select("__gk", "__rid"), "__gk")
-                    .filter(F.col("id") == F.col("__rid"))
-                    .select("id", "sh")
-                    .localCheckpoint(eager=False))
-    # n_sh rides the explode projection (sh is already distinct, so
-    # size(sh) == the per-id row count the old count-over-partition
-    # window recomputed — one WindowExec pass saved, same exchange)
-    inv = shingled.select("id", F.size("sh").alias("n_sh"),
-                          F.explode("sh").alias("shingle"))
-    freq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("f"))
-    w = Window.partitionBy("id").orderBy(F.asc("f"), F.asc("shingle"))
-    ranked = (inv.join(freq, "shingle")
-                 .withColumn("rn", F.row_number().over(w)))
+        shingled, members, reps = _collapse_verbatim(shingled, _sh_key())
+    _, ranked = _ranked_shingles(shingled)
     # Prefix length p = n - ceil(t*n) + 1.  The epsilon guards IEEE noise:
     # (1-0.8)*10 evaluates to 1.9999999999999996, which floor()+1 would turn
     # into a too-short prefix and silently drop pairs at exactly j == t.
@@ -431,21 +540,7 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
                  F.max("__pnb").alias("__nb0"))
             .filter(pos_bound + 1e-9 >= min_overlap)
             .select("id_a", "id_b"))
-    # Verify over xxhash64 ARRAYS, not shingle strings (round 14, guide
-    # §2.3 narrower types): the per-candidate array_intersect builds a
-    # hash set of |a|+|b| elements — on 8-byte longs it measured 3.5x
-    # cheaper than on ~27-byte shingle strings (same candidate set,
-    # results identical), and the candidate joins ship long arrays
-    # instead of string arrays.  |A∩B| over hashes equals |A∩B| over
-    # shingles unless xxhash64 collides inside one document's shingle
-    # set (~1e-16 per doc) — the repo's accepted md5/xxhash64 key
-    # collision class.  Hashed once per DOC on a pinned frame: inline
-    # it would re-evaluate per CANDIDATE row (the r12 expansion-join
-    # pathology).
-    hashed = (shingled.select(
-        "id", F.size("sh").alias("__n"),
-        F.transform("sh", lambda s: F.xxhash64(s)).alias("__hs"))
-        .localCheckpoint(eager=False))
+    hashed = _hashed_sets(shingled)
     sh_a = hashed.toDF("id_a", "__pa", "__ha")
     sh_b = hashed.toDF("id_b", "__pb", "__hb")
     # PPJoin's companion length filter: J(a,b) >= t forces
@@ -479,41 +574,18 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
                 .filter(F.col("__j") >= threshold)
                 .select("id_a", "id_b", "__j"))
     if members is not None:
-        # PIN the representative verdicts BEFORE the member expansion
-        # (the edit_dup_pairs lesson, measured there 141.9s -> 2.8s):
-        # without it Catalyst's projection collapse can inline the
-        # array_intersect verify past the expansion joins and
-        # re-evaluate it once per MEMBER pair whenever the expansion
-        # side broadcasts (no exchange to materialize the projection)
-        verified = verified.localCheckpoint(eager=False)
-        # Expand representative verdicts to member pairs, re-oriented
-        # least/greatest (jaccard is symmetric; members of different
-        # groups can interleave in id order).  Output-bound: only TRUE
-        # pairs materialize, no per-member intersect.
-        cross = (verified
-                 .withColumnRenamed("id_a", "__ra")
-                 .withColumnRenamed("id_b", "__rb")
-                 .join(members.toDF("__ma", "__ra"), "__ra")
-                 .join(members.toDF("__mb", "__rb"), "__rb")
-                 .select(F.least("__ma", "__mb").alias("id_a"),
-                         F.greatest("__ma", "__mb").alias("id_b"),
-                         "__j"))
         # exact copies of each other: J = |sh| / |sh| = exactly 1.0;
         # empty shingle sets are filtered FIRST (they never reach the
         # raw path's index either, and ANSI mode raises on 0/0)
-        within_meta = (shingled
-                       .filter(F.size("sh") > 0)
-                       .join(reps.filter(F.col("__gsz") >= 2)
-                             .select(F.col("__rid").alias("id")), "id")
-                       .select(F.col("id").alias("__rid"),
-                               F.lit(1.0).alias("__j"))
-                       .filter(F.col("__j") >= threshold))
-        within = (within_meta
-                  .join(members.toDF("id_a", "__rid"), "__rid")
-                  .join(members.toDF("id_b", "__rid"), "__rid")
-                  .filter(F.col("id_a") < F.col("id_b"))
-                  .select("id_a", "id_b", "__j"))
-        verified = cross.unionByName(within)
+        within = (shingled
+                  .filter(F.size("sh") > 0)
+                  .join(reps.filter(F.col("__gsz") >= 2)
+                        .select(F.col("__rid").alias("id")), "id")
+                  .select(F.col("id").alias("__rid"),
+                          F.lit(1.0).alias("__j"))
+                  .filter(F.col("__j") >= threshold))
+        verified = _expand_members(verified, members, within,
+                                   symmetric=True)
     return verified.select("id_a", "id_b", F.round("__j", 4).alias("jaccard"))
 
 
@@ -544,8 +616,9 @@ def ngram_containment_pairs(df: DataFrame, n: int = 3,
     shingles, so candidate volume is sum over prefix entries of
     df(shingle) — small df by selection, no hot-key blowup.  PPJoin's
     length filter degenerates to the one-sided ``|B| >= t * |A|``.
-    Verified with a full ``array_intersect``; same Arrow shingler,
-    pin ordering and 4dp output rounding as the Jaccard twin.
+    Verified with a full ``array_intersect``; same shingle frame,
+    PPJoin index (:func:`_ranked_shingles`), hashed verify sets
+    (:func:`_hashed_sets`) and 4dp output rounding as the Jaccard twin.
 
     ``prefix_extend`` (round 14): each document indexes
     ``ceil(p * prefix_extend)`` EXTRA rarest shingles beyond the
@@ -557,63 +630,26 @@ def ngram_containment_pairs(df: DataFrame, n: int = 3,
     default 0.25 measured a ~1000x verify-candidate cut for ~1.4x
     candidate-join rows at sf0.1/t=0.6.
 
-    ``collapse_exact`` (default ``'auto'``) closes the verbatim-duplicate
-    worst case (VERDICT r11): on a corpus dense in exact copies the
-    true directed pairs grow ~multiplicity^2, and running the
-    O(|A|+|B|) ``array_intersect`` verify per MEMBER pair made the
-    adversarial 32x replicate row a 20-minute query.  Identical
-    shingle sequences are first collapsed to one representative
-    (md5-of-sequence + length group key; tokens are \\s+-split so the
-    0x1f joiner cannot collide with token text), the whole
-    prefix/probe/verify pipeline runs at REPRESENTATIVE level, and
-    member pairs are expanded back by two hash joins — same output,
-    bit for bit: cross-group pairs inherit the representative
-    verdict (identical inputs give identical containment), and
-    within-group pairs (exact copies of each other) are emitted
-    directly with ``n_common = |distinct shingles|``, ``containment
-    = n_common / |sh|`` — the exact value the raw verify computes
-    for two identical arrays.  ``'auto'`` (the default) probes with
-    one cheap 2-value xxhash64 aggregate (:func:`_collapse_effective`)
-    and skips the group+expand machinery entirely unless verbatim
-    copies reach :data:`_COLLAPSE_AUTO_MIN_FRAC` of rows; ``True``
-    forces it; ``collapse_exact=False`` is the raw per-member opt-out
-    (the pre-r12 plan).  NOTE (ADVICE r13): under ``'auto'`` the
-    probe runs EAGERLY at construction time — calling this builder
-    launches one small Spark job before any action on the returned
-    frame (``True`` / ``False`` stay fully lazy)."""
+    ``collapse_exact`` (``'auto'`` / ``True`` / ``False``, see
+    :func:`_collapse_verbatim`) closes the verbatim-duplicate worst
+    case (VERDICT r11): on a corpus dense in exact copies the true
+    directed pairs grow ~multiplicity^2, and running the verify per
+    MEMBER pair made the adversarial 32x replicate row a 20-minute
+    query.  The whole prefix/probe/verify pipeline runs at
+    REPRESENTATIVE level; within-group pairs (exact copies of each
+    other) carry ``n_common = |distinct shingles|``, ``containment =
+    n_common / |sh|`` — the exact value the raw verify computes for
+    two identical arrays."""
     if prefix_extend < 0:
         raise ValueError("prefix_extend must be >= 0 (0 disables the "
                          f"extended prefix), got {prefix_extend!r}")
-    shingled = (_fan_out(df)
-                .select(F.col(id_col).alias("id"),
-                        _word_shingles_arrow(text_col, n).alias("sh"))
-                .localCheckpoint(eager=False))
+    shingled = shingle_frame(df, n=n, text_col=text_col, id_col=id_col)
     members = reps = None
     if _collapse_effective(shingled, F.xxhash64("sh"), collapse_exact):
-        keyed = shingled.withColumn(
-            "__gk", F.concat(F.md5(F.concat_ws("\x1f", "sh")),
-                             F.lit("#"), F.size("sh").cast("string")))
-        reps = (keyed.groupBy("__gk")
-                .agg(F.min("id").alias("__rid"),
-                     F.count(F.lit(1)).alias("__gsz"))
-                .localCheckpoint(eager=False))
-        members = (keyed.select("id", "__gk")
-                   .join(reps.select("__gk", "__rid"), "__gk")
-                   .select("id", "__rid")
-                   .localCheckpoint(eager=False))
-        shingled = (keyed.join(reps.select("__gk", "__rid"), "__gk")
-                    .filter(F.col("id") == F.col("__rid"))
-                    .select("id", "sh")
-                    .localCheckpoint(eager=False))
-    # n_sh rides the explode projection (sh is distinct; see the
-    # Jaccard twin) — the probe side below re-selects just (id,
-    # shingle), so the extra column never widens the candidate join
-    inv = shingled.select("id", F.size("sh").alias("n_sh"),
-                          F.explode("sh").alias("shingle"))
-    freq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("f"))
-    w = Window.partitionBy("id").orderBy(F.asc("f"), F.asc("shingle"))
-    ranked = (inv.join(freq, "shingle")
-              .withColumn("rn", F.row_number().over(w)))
+        shingled, members, reps = _collapse_verbatim(shingled, _sh_key())
+    # the probe side below re-selects just (id, shingle) of inv, so
+    # the n_sh column never widens the candidate join
+    inv, ranked = _ranked_shingles(shingled)
     # containment prefix p = n - ceil(t*n) + 1 (same epsilon guard as
     # the Jaccard twin): if none of A's p rarest shingles hit B, then
     # |A∩B| <= ceil(t*n) - 1 < t*n — below threshold, exact prune.
@@ -656,22 +692,7 @@ def ngram_containment_pairs(df: DataFrame, n: int = 3,
                  F.max("__req").alias("__r"))
             .filter(F.col("__op") >= F.col("__r"))
             .select("id_a", "id_b"))
-    # Verify over xxhash64 ARRAYS, not shingle strings (round 14, guide
-    # §2.3 narrower types): the per-candidate array_intersect builds a
-    # hash set of |a|+|b| elements — on 8-byte longs it measured 3.5x
-    # cheaper than on ~27-byte shingle strings (8.86s -> 2.55s over the
-    # same candidate set, results identical), and the candidate joins
-    # ship long arrays instead of string arrays.  |A∩B| over hashes
-    # equals |A∩B| over shingles unless xxhash64 collides inside one
-    # document's ~10^2-shingle set (~1e-16 per doc) — the same accepted
-    # collision class as the repo's md5/xxhash64 key convention
-    # (hashed-window span counting, band keys).  Hashed once per DOC on
-    # a pinned frame: computed inline it would re-evaluate per
-    # CANDIDATE row (the r12 expansion-join pathology).
-    hashed = (shingled.select(
-        "id", F.size("sh").alias("__n"),
-        F.transform("sh", lambda s: F.xxhash64(s)).alias("__hs"))
-        .localCheckpoint(eager=False))
+    hashed = _hashed_sets(shingled)
     sh_a = hashed.toDF("id_a", "__na", "__ha")
     sh_b = hashed.toDF("id_b", "__nb", "__hb")
     len_ok = (F.col("__nb") * F.lit(1.0)
@@ -689,45 +710,24 @@ def ngram_containment_pairs(df: DataFrame, n: int = 3,
                 .filter(F.col("__c") >= threshold)
                 .select("id_a", "id_b", "n_common", "__c"))
     if members is not None:
-        # PIN the representative verdicts BEFORE the member expansion
-        # (the edit_dup_pairs lesson, measured there 141.9s -> 2.8s):
-        # without it Catalyst's projection collapse can inline the
-        # array_intersect verify past the expansion joins and
-        # re-evaluate it once per MEMBER pair whenever the expansion
-        # side broadcasts (no exchange to materialize the projection)
-        verified = verified.localCheckpoint(eager=False)
-        # Expand representative verdicts back to member pairs: the
-        # verify cost stays candidate-bound at representative level;
-        # these joins only materialize TRUE pairs (output-bound by
-        # definition, no per-pair set intersection).
-        cross = (verified
-                 .withColumnRenamed("id_a", "__ra")
-                 .withColumnRenamed("id_b", "__rb")
-                 .join(members.toDF("id_a", "__ra"), "__ra")
-                 .join(members.toDF("id_b", "__rb"), "__rb")
-                 .select("id_a", "id_b", "n_common", "__c"))
         # Exact copies of each other: containment of identical arrays
         # is |distinct| / |sh| (the raw verify's value), emitted per
         # ordered member pair of every size>=2 group that clears the
         # threshold — no intersect needed.  Empty shingle sets are
         # filtered FIRST (never in the raw path's index; ANSI 0/0
         # raises).
-        within_meta = (shingled
-                       .filter(F.size("sh") > 0)
-                       .join(reps.filter(F.col("__gsz") >= 2)
-                             .select(F.col("__rid").alias("id")), "id")
-                       .select(F.col("id").alias("__rid"),
-                               F.size(F.array_distinct("sh"))
-                                .alias("n_common"),
-                               (F.size(F.array_distinct("sh"))
-                                / F.size("sh")).alias("__c"))
-                       .filter(F.col("__c") >= threshold))
-        within = (within_meta
-                  .join(members.toDF("id_a", "__rid"), "__rid")
-                  .join(members.toDF("id_b", "__rid"), "__rid")
-                  .filter(F.col("id_a") != F.col("id_b"))
-                  .select("id_a", "id_b", "n_common", "__c"))
-        verified = cross.unionByName(within)
+        within = (shingled
+                  .filter(F.size("sh") > 0)
+                  .join(reps.filter(F.col("__gsz") >= 2)
+                        .select(F.col("__rid").alias("id")), "id")
+                  .select(F.col("id").alias("__rid"),
+                          F.size(F.array_distinct("sh"))
+                           .alias("n_common"),
+                          (F.size(F.array_distinct("sh"))
+                           / F.size("sh")).alias("__c"))
+                  .filter(F.col("__c") >= threshold))
+        verified = _expand_members(verified, members, within,
+                                   symmetric=False)
     return verified.select("id_a", "id_b",
                            F.col("n_common").cast("long")
                             .alias("n_common"),
@@ -940,26 +940,15 @@ def edit_dup_pairs(df: DataFrame, max_dist: int = 10, n: int = 3,
     to ASCII rows (strlen == length) so the gate is well-defined,
     and the operator itself is the character-level spelling.
 
-    ``collapse_exact`` (default ``'auto'`` — the family's round-13
-    probe-gated verbatim-collapse convention): identical texts collapse to one
-    representative (md5(text) + length key) BEFORE the banding, the
-    levenshtein runs once per REPRESENTATIVE pair, and member pairs
-    expand back — bit-identical to the raw path, because members of
-    the same group are verbatim copies (cross-group member pairs
-    inherit the representative distance exactly; within-group pairs
-    are distance 0, emitted for groups whose text clears the same
+    ``collapse_exact`` (``'auto'`` / ``True`` / ``False``, see
+    :func:`_collapse_verbatim`): identical texts collapse to one
+    representative (md5(text) + length key) BEFORE the banding, so the
+    levenshtein runs once per REPRESENTATIVE pair.  Cross-group member
+    pairs inherit the representative distance exactly; within-group
+    pairs are distance 0, emitted for groups whose text clears the same
     >= n-token shingle support the raw banding needs, so short texts
-    stay excluded in BOTH paths).  On verbatim-dup-dense corpora the
-    per-member O(len * max_dist) verify disappears; ``'auto'`` probes
-    with one cheap 2-value xxhash64-of-text aggregate
-    (:func:`_collapse_effective`) and skips the machinery unless
-    verbatim copies reach :data:`_COLLAPSE_AUTO_MIN_FRAC` of rows;
-    ``True`` forces it; ``collapse_exact=False`` is the raw opt-out.
-    NOTE (ADVICE r13): under ``'auto'`` the probe runs EAGERLY at
-    construction time — calling this builder launches one small Spark
-    job before any action on the returned frame (``True`` / ``False``
-    stay fully lazy).  NULL texts never pair in either path (minhash
-    has no shingles; collapse filters them before grouping).
+    stay excluded in BOTH paths.  NULL texts never pair in either path
+    (minhash has no shingles; collapse filters them before grouping).
 
     Scale shape: banded candidate join (no cross product), two
     un-hinted equi-joins to ride the texts in (candidates are
@@ -974,27 +963,10 @@ def edit_dup_pairs(df: DataFrame, max_dist: int = 10, n: int = 3,
          .filter(F.col("__t").isNotNull()))
     members = reps = None
     if _collapse_effective(t, F.xxhash64("__t"), collapse_exact):
-        # group key only (md5 + length) rides the shuffles — the 2 KB
-        # texts stay OUT of the collapse agg (the ngram_jaccard
-        # collapse pattern: representatives re-acquire their text via
-        # the id == __rid filter, not a first() agg that would shuffle
-        # every copy's full text)
-        keyed = (t.withColumn(
-            "__gk", F.concat(F.md5("__t"), F.lit("#"),
-                             F.length("__t").cast("string")))
-            .localCheckpoint(eager=False))
-        reps = (keyed.groupBy("__gk")
-                .agg(F.min("id").alias("__rid"),
-                     F.count(F.lit(1)).alias("__gsz"))
-                .localCheckpoint(eager=False))
-        members = (keyed.select("id", "__gk")
-                   .join(reps.select("__gk", "__rid"), "__gk")
-                   .select("id", "__rid")
-                   .localCheckpoint(eager=False))
-        t = (keyed.join(reps.select("__gk", "__rid"), "__gk")
-             .filter(F.col("id") == F.col("__rid"))
-             .select("id", "__t")
-             .localCheckpoint(eager=False))
+        t, members, reps = _collapse_verbatim(
+            t, F.concat(F.md5("__t"), F.lit("#"),
+                        F.length("__t").cast("string")),
+            pin_keyed=True)
     cand = (minhash_lsh_pairs_md5(t, n=n, num_hashes=num_hashes,
                                   bands=bands, threshold=threshold,
                                   text_col="__t", id_col="id")
@@ -1011,25 +983,6 @@ def edit_dup_pairs(df: DataFrame, max_dist: int = 10, n: int = 3,
                 .filter(F.col("edit_dist") >= 0)
                 .select("id_a", "id_b", "edit_dist"))
     if members is not None:
-        # PIN the representative verdicts BEFORE the member expansion:
-        # without this, Catalyst's projection collapse inlines the
-        # levenshtein expression past the expansion joins and
-        # re-evaluates it once per MEMBER pair — measured 141.9s vs
-        # 2.8s for the 32x replicate's 254k expanded rows; the pin
-        # keeps the O(len*max_dist) verify at representative
-        # cardinality, which is the whole point of the collapse
-        verified = verified.localCheckpoint(eager=False)
-        # cross-group member pairs inherit the representative
-        # distance; re-orient least/greatest (members of different
-        # groups interleave in id order)
-        cross = (verified
-                 .withColumnRenamed("id_a", "__ra")
-                 .withColumnRenamed("id_b", "__rb")
-                 .join(members.toDF("__ma", "__ra"), "__ra")
-                 .join(members.toDF("__mb", "__rb"), "__rb")
-                 .select(F.least("__ma", "__mb").alias("id_a"),
-                         F.greatest("__ma", "__mb").alias("id_b"),
-                         "edit_dist"))
         # within-group verbatim pairs: distance exactly 0 — emitted
         # only when the text clears the raw path's shingle support
         # (>= n whitespace tokens), so both paths exclude the same
@@ -1041,12 +994,10 @@ def edit_dup_pairs(df: DataFrame, max_dist: int = 10, n: int = 3,
         within = (reps.filter(F.col("__gsz") >= 2)
                   .select("__rid")
                   .join(eligible, "__rid")
-                  .join(members.toDF("id_a", "__rid"), "__rid")
-                  .join(members.toDF("id_b", "__rid"), "__rid")
-                  .filter(F.col("id_a") < F.col("id_b"))
-                  .select("id_a", "id_b",
+                  .select("__rid",
                           F.lit(0).cast("long").alias("edit_dist")))
-        verified = cross.unionByName(within)
+        verified = _expand_members(verified, members, within,
+                                   symmetric=True)
     return verified
 
 
@@ -1233,14 +1184,16 @@ def winnow_pairs(df: DataFrame, k: int = 4, w: int = 4,
                   .select("id_a", "id_b", "n_shared", "containment"))
 
 
-def _strip_rebuild(base: DataFrame, removed: DataFrame, id_col: str,
-                   kept_name: str, removed_name: str) -> DataFrame:
+def _strip_rebuild(base: DataFrame, removed: DataFrame, k: int,
+                   id_col: str, kept_name: str,
+                   removed_name: str) -> DataFrame:
     """Reassemble per-doc text minus a set of dropped token positions
     WITHOUT a token-level shuffle (round 14, guide §2.3 "aggregate
     before you shuffle").
 
-    ``base`` is ``(id, t array<string>)``; ``removed`` is ``(id, ti)``
-    rows naming positions to drop (duplicates allowed — folded here).
+    ``base`` is ``(id, t array<string>)``; ``removed`` is ``(id, pos)``
+    rows naming k-token windows to drop — each covers positions ``pos
+    .. pos + k - 1`` (a bounded explode; overlaps are folded here).
     The old spelling exploded every token, anti-joined on ``(id, ti)``
     and re-grouped with ``sort_array(collect_list(...))`` — three
     token-mass shuffles.  This one folds the dropped positions (the
@@ -1252,7 +1205,10 @@ def _strip_rebuild(base: DataFrame, removed: DataFrame, id_col: str,
     times when AQE broadcasts the drop-set side).  Output is
     bit-identical: same token order, single-space join, empty string
     for fully-stripped or empty docs."""
-    dropset = (removed.groupBy("id")
+    dropset = (removed.select("id", F.explode(
+                   F.sequence(F.col("pos"), F.col("pos") + (k - 1)))
+                   .alias("ti"))
+               .groupBy("id")
                .agg(F.collect_set("ti").alias("__drop")))
     all_idx = (F.when(F.size("t") > 0,
                       F.sequence(F.lit(0), F.size("t") - 1))
@@ -1341,14 +1297,12 @@ def strip_boilerplate(df: DataFrame, k: int = 4, w: int = 4,
     # positions are folded per doc inside _strip_rebuild's collect_set
     # aggregate, so the old pre-distinct (a second (id, ti) shuffle)
     # is subsumed by the one groupBy
-    drop = (fps.join(hot, "fp")
-              .select("id", F.explode(
-                  F.sequence(F.col("pos"), F.col("pos") + (k - 1))).alias("ti")))
+    drop = fps.join(hot, "fp").select("id", "pos")
     trimmed = F.trim(F.lower(F.col(text_col)))
     toks_arr = F.when(trimmed == "", F.array().cast("array<string>")) \
                 .otherwise(F.split(trimmed, r"\s+"))
     base = df.select(F.col(id_col).alias("id"), toks_arr.alias("t"))
-    return _strip_rebuild(base, drop, id_col, "n_tokens", "n_dropped")
+    return _strip_rebuild(base, drop, k, id_col, "n_tokens", "n_dropped")
 
 
 def hamming_pairs(hashed: DataFrame, hash_col: str, max_hamming: int = 4,
@@ -1805,6 +1759,51 @@ def _span_toks(text_col: str, lowered: bool = True) -> Column:
             .otherwise(F.split(t, r"\s+"))
 
 
+def _gram_windows(src: DataFrame, id_col: str, toks: Column, k: int,
+                  key: Column | None = None) -> DataFrame:
+    """``(id, pos, g)``: one row per k-token window of ``toks`` (each
+    document's :func:`_span_toks` array), ``g`` the md5 of the window's
+    tokens — or of the same window of ``key``, an array aligned with
+    ``toks`` position-for-position (the strip operators key on
+    lowercased tokens and keep ``toks`` in original case).  Docs shorter
+    than ``k`` tokens yield no rows.  Grams are md5-hashed before any
+    shuffle, so the counts and joins downstream move 32-byte keys, not
+    k-token strings.  The one window stream of the dup-span, strip,
+    novelty and span-decontamination operators."""
+    n = F.size(toks)
+    # greatest() keeps the sequence endpoint valid even if the then-branch
+    # is evaluated eagerly for short docs; the when() guard discards it
+    pos_arr = F.when(n >= k, F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))) \
+               .otherwise(F.array().cast("array<int>"))
+    key = F.col("t") if key is None else key
+    return (src.select(F.col(id_col).alias("id"), toks.alias("t"),
+                       F.explode(pos_arr).alias("pos"))
+            .select("id", "pos",
+                    F.md5(F.concat_ws(" ", F.slice(key, F.col("pos") + 1, k)))
+                     .alias("g")))
+
+
+def _islands(hits: DataFrame, k: int, id_col: str) -> DataFrame:
+    """Gaps-and-islands merge of duplicated k-gram positions ``(id,
+    pos)`` into maximal spans ``(id_col, span_start, span_end,
+    span_tokens, n_grams)``, positions 0-based inclusive: overlapping
+    or touching windows (``pos <= previous pos + k``) merge into one
+    span.  The per-doc window sorts only that doc's hit positions —
+    bounded by document length, never by corpus size."""
+    w = Window.partitionBy("id").orderBy("pos")
+    brk = F.when(F.col("pos") > F.lag("pos").over(w) + k, 1).otherwise(0)
+    islands = (hits.withColumn("__brk", brk)
+               .withColumn("__isl", F.sum("__brk").over(
+                   w.rowsBetween(Window.unboundedPreceding, 0))))
+    return (islands.groupBy("id", "__isl")
+            .agg(F.min("pos").alias("span_start"),
+                 (F.max("pos") + (k - 1)).alias("span_end"),
+                 (F.max("pos") - F.min("pos") + k).alias("span_tokens"),
+                 F.count(F.lit(1)).alias("n_grams"))
+            .select(F.col("id").alias(id_col), "span_start", "span_end",
+                    "span_tokens", "n_grams"))
+
+
 def dup_spans(df: DataFrame, k: int = 8, min_docs: int = 2,
               text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact duplicated-substring spans: maximal token ranges fully
@@ -1829,36 +1828,13 @@ def dup_spans(df: DataFrame, k: int = 8, min_docs: int = 2,
     + O(duplicated positions) for the rest — output-bound, the same
     contract as the winnowing operators.
     """
-    toks = _span_toks(text_col)
-    n = F.size(toks)
-    # greatest() keeps the sequence endpoint valid even if the then-branch
-    # is evaluated eagerly for short docs; the when() guard discards it
-    pos_arr = F.when(n >= k, F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))) \
-               .otherwise(F.array().cast("array<int>"))
-    grams = (_fan_out(df)
-             .select(F.col(id_col).alias("id"), toks.alias("t"),
-                     F.explode(pos_arr).alias("pos"))
-             .select("id", "pos",
-                     F.md5(F.concat_ws(
-                         " ", F.slice(F.col("t"), F.col("pos") + 1, k)))
-                      .alias("g")))
+    grams = _gram_windows(_fan_out(df), id_col, _span_toks(text_col), k)
     dup_grams = (grams.groupBy("g")
                  .agg(F.count_distinct("id").alias("n_docs"))
                  .filter(F.col("n_docs") >= min_docs)
                  .select("g"))
-    dup = grams.join(dup_grams, "g").select("id", "pos")
-    w = Window.partitionBy("id").orderBy("pos")
-    brk = F.when(F.col("pos") > F.lag("pos").over(w) + k, 1).otherwise(0)
-    islands = (dup.withColumn("__brk", brk)
-               .withColumn("__isl", F.sum("__brk").over(
-                   w.rowsBetween(Window.unboundedPreceding, 0))))
-    return (islands.groupBy("id", "__isl")
-            .agg(F.min("pos").alias("span_start"),
-                 (F.max("pos") + (k - 1)).alias("span_end"),
-                 (F.max("pos") - F.min("pos") + k).alias("span_tokens"),
-                 F.count(F.lit(1)).alias("n_grams"))
-            .select(F.col("id").alias(id_col), "span_start", "span_end",
-                    "span_tokens", "n_grams"))
+    return _islands(grams.join(dup_grams, "g").select("id", "pos"), k,
+                    id_col)
 
 
 def dup_substring_spans(df: DataFrame, min_len: int = 20,
@@ -1925,18 +1901,7 @@ def dup_substring_spans(df: DataFrame, min_len: int = 20,
     if min_count < 2:
         raise ValueError("min_count must be >= 2")
     k = int(min_len)
-    toks = _span_toks(text_col)
-    n = F.size(toks)
-    pos_arr = F.when(n >= k, F.sequence(F.lit(0),
-                                        F.greatest(n - k, F.lit(0)))) \
-               .otherwise(F.array().cast("array<int>"))
-    grams = (_fan_out(df)
-             .select(F.col(id_col).alias("id"), toks.alias("t"),
-                     F.explode(pos_arr).alias("pos"))
-             .select("id", "pos",
-                     F.md5(F.concat_ws(
-                         " ", F.slice(F.col("t"), F.col("pos") + 1, k)))
-                      .alias("g")))
+    grams = _gram_windows(_fan_out(df), id_col, _span_toks(text_col), k)
     if with_partners:
         # grams gains a third and fourth consumer below — pin it once
         grams = grams.localCheckpoint(eager=False)
@@ -1944,19 +1909,8 @@ def dup_substring_spans(df: DataFrame, min_len: int = 20,
                  .agg(F.count(F.lit(1)).alias("n_occ"))
                  .filter(F.col("n_occ") >= int(min_count))
                  .select("g"))
-    dup = grams.join(dup_grams, "g").select("id", "pos")
-    w = Window.partitionBy("id").orderBy("pos")
-    brk = F.when(F.col("pos") > F.lag("pos").over(w) + k, 1).otherwise(0)
-    islands = (dup.withColumn("__brk", brk)
-               .withColumn("__isl", F.sum("__brk").over(
-                   w.rowsBetween(Window.unboundedPreceding, 0))))
-    spans = (islands.groupBy("id", "__isl")
-             .agg(F.min("pos").alias("span_start"),
-                  (F.max("pos") + (k - 1)).alias("span_end"),
-                  (F.max("pos") - F.min("pos") + k).alias("span_tokens"),
-                  F.count(F.lit(1)).alias("n_grams"))
-             .select("id", "span_start", "span_end",
-                     "span_tokens", "n_grams"))
+    spans = _islands(grams.join(dup_grams, "g").select("id", "pos"), k,
+                     "id")
     if not with_partners:
         return spans.withColumnRenamed("id", id_col)
     # OUTPUT-bound partner attribution: spans (not occurrences) drive
@@ -2025,17 +1979,7 @@ def strip_dup_spans(df: DataFrame, k: int = 8, min_docs: int = 2,
     toks = _span_toks(text_col, lowered=False)
     base = _fan_out(df).select(F.col(id_col).alias("id"), toks.alias("t"))
     lower_t = F.transform(F.col("t"), lambda x: F.lower(x))
-    grams = (base
-             .select("id", "t", F.explode(
-                 F.when(F.size(F.col("t")) >= k,
-                        F.sequence(F.lit(0),
-                                   F.greatest(F.size(F.col("t")) - k,
-                                              F.lit(0))))
-                  .otherwise(F.array().cast("array<int>"))).alias("pos"))
-             .select("id", "pos",
-                     F.md5(F.concat_ws(
-                         " ", F.slice(lower_t, F.col("pos") + 1, k)))
-                      .alias("g")))
+    grams = _gram_windows(base, "id", F.col("t"), k, key=lower_t)
     owners = (grams.groupBy("g")
               .agg(F.count_distinct("id").alias("n_docs"),
                    F.min("id").alias("owner"))
@@ -2043,10 +1987,8 @@ def strip_dup_spans(df: DataFrame, k: int = 8, min_docs: int = 2,
               .select("g", "owner"))
     removed = (grams.join(owners, "g")
                .filter(F.col("id") != F.col("owner"))
-               .select("id", F.explode(
-                   F.sequence(F.col("pos"), F.col("pos") + (k - 1)))
-                   .alias("ti")))
-    return _strip_rebuild(base, removed, id_col,
+               .select("id", "pos"))
+    return _strip_rebuild(base, removed, k, id_col,
                           "n_tokens_kept", "n_tokens_removed")
 
 
@@ -2127,17 +2069,7 @@ def strip_dup_substrings(df: DataFrame, min_len: int = 20,
     toks = _span_toks(text_col, lowered=False)
     base = _fan_out(df).select(F.col(id_col).alias("id"), toks.alias("t"))
     lower_t = F.transform(F.col("t"), lambda x: F.lower(x))
-    grams = (base
-             .select("id", "t", F.explode(
-                 F.when(F.size(F.col("t")) >= k,
-                        F.sequence(F.lit(0),
-                                   F.greatest(F.size(F.col("t")) - k,
-                                              F.lit(0))))
-                  .otherwise(F.array().cast("array<int>"))).alias("pos"))
-             .select("id", "pos",
-                     F.md5(F.concat_ws(
-                         " ", F.slice(lower_t, F.col("pos") + 1, k)))
-                      .alias("g")))
+    grams = _gram_windows(base, "id", F.col("t"), k, key=lower_t)
     owners = (grams.groupBy("g")
               .agg(F.count(F.lit(1)).alias("n_occ"),
                    F.min(F.struct(F.col("id"), F.col("pos")))
@@ -2148,10 +2080,8 @@ def strip_dup_substrings(df: DataFrame, min_len: int = 20,
     removed = (grams.join(owners, "g")
                .filter(~((F.col("id") == F.col("__oid"))
                          & (F.col("pos") == F.col("__opos"))))
-               .select("id", F.explode(
-                   F.sequence(F.col("pos"), F.col("pos") + (k - 1)))
-                   .alias("ti")))
-    return _strip_rebuild(base, removed, id_col,
+               .select("id", "pos"))
+    return _strip_rebuild(base, removed, k, id_col,
                           "n_tokens_kept", "n_tokens_removed")
 
 
@@ -2168,17 +2098,8 @@ def gram_novelty(df: DataFrame, k: int = 8, text_col: str = "text",
     Scale shape: identical to :func:`dup_spans` — md5 gram keys, one
     partial-agg doc-frequency count, one join back, one per-doc agg.
     """
-    toks = _span_toks(text_col)
-    n = F.size(toks)
-    pos_arr = F.when(n >= k, F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))) \
-               .otherwise(F.array().cast("array<int>"))
-    grams = (_fan_out(df)
-             .select(F.col(id_col).alias("id"), toks.alias("t"),
-                     F.explode(pos_arr).alias("pos"))
-             .select("id",
-                     F.md5(F.concat_ws(
-                         " ", F.slice(F.col("t"), F.col("pos") + 1, k)))
-                      .alias("g")))
+    grams = (_gram_windows(_fan_out(df), id_col, _span_toks(text_col), k)
+             .select("id", "g"))
     docfreq = grams.groupBy("g").agg(F.count_distinct("id").alias("n_docs"))
     per_doc = (grams.join(docfreq, "g")
                .groupBy("id")

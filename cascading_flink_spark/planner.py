@@ -66,6 +66,37 @@ def _python_stage_parts(df: DataFrame) -> int:
     return max(df.sparkSession.sparkContext.defaultParallelism, shuffle_parts)
 
 
+def _tagged_union(renamed: list[DataFrame], key_names: list[list[str]]
+                  ) -> tuple[DataFrame, list[str], list[list[str]]]:
+    """BufferJoin's tagged union (``prepareBufferCoGroupInput``
+    ``:802-851``): every input row carries its key columns as ``__k<i>``,
+    its input index as ``__idx`` and the superset of all inputs' columns
+    (inputs are already renamed collision-free), null-padded — no row
+    serde.  Returns ``(unified, key_aliases, slices)``, ``slices[i]``
+    being input ``i``'s own columns."""
+    key_aliases = [f"__k{i}" for i in range(len(key_names[0]))]
+    col_types: dict[str, T.DataType] = {}
+    slices: list[list[str]] = []
+    for rdf in renamed:
+        slices.append(list(rdf.columns))
+        for f in rdf.schema.fields:
+            col_types[f.name] = f.dataType
+    all_cols = [c for sl in slices for c in sl]
+    parts = []
+    for idx, (rdf, keys_i, sl) in enumerate(zip(renamed, key_names, slices)):
+        sel = [F.col(k).alias(a) for k, a in zip(keys_i, key_aliases)]
+        sel.append(F.lit(idx).alias("__idx"))
+        own = set(sl)
+        for c in all_cols:
+            sel.append(F.col(c) if c in own
+                       else F.lit(None).cast(col_types[c]).alias(c))
+        parts.append(rdf.select(*sel))
+    unified = parts[0]
+    for prt in parts[1:]:
+        unified = unified.unionByName(prt)
+    return unified, key_aliases, slices
+
+
 class FlowPlanner:
     """Compile pipes against bound source DataFrames.
 
@@ -962,10 +993,8 @@ class FlowPlanner:
         """BufferJoin — user logic over all co-grouped streams.
 
         2-way: ``cogroup().applyInPandas`` (SURVEY.md §2.1 #11).  n-way: the
-        reference's tagged-union trick (``prepareBufferCoGroupInput``
-        ``:802-851``: tag rows with an input index, union, group, split) —
-        here the union runs over the superset of all inputs' columns (inputs
-        are already renamed collision-free), null-padded, no row serde.
+        reference's tagged-union trick (:func:`_tagged_union`: tag rows with
+        an input index, union, group, split).
         """
         fields = []
         for nm, t in zip(joiner.declared.names, joiner.types):
@@ -986,33 +1015,11 @@ class FlowPlanner:
             return g1.cogroup(g2).applyInPandas(_apply, schema=schema)
 
         # n-way tagged union
-        n_keys = len(key_names[0])
-        key_aliases = [f"__k{i}" for i in range(n_keys)]
-        col_types: dict[str, T.DataType] = {}
-        slices: list[list[str]] = []
-        for rdf in renamed:
-            slices.append(list(rdf.columns))
-            for f in rdf.schema.fields:
-                col_types[f.name] = f.dataType
-        all_cols = [c for sl in slices for c in sl]
-        parts = []
-        for idx, (rdf, keys_i, sl) in enumerate(zip(renamed, key_names, slices)):
-            sel = [F.col(k).alias(a) for k, a in zip(keys_i, key_aliases)]
-            sel.append(F.lit(idx).alias("__idx"))
-            own = set(sl)
-            for c in all_cols:
-                sel.append(F.col(c) if c in own
-                           else F.lit(None).cast(col_types[c]).alias(c))
-            parts.append(rdf.select(*sel))
-        unified = parts[0]
-        for prt in parts[1:]:
-            unified = unified.unionByName(prt)
-
-        slice_list = slices  # close over
+        unified, key_aliases, slices = _tagged_union(renamed, key_names)
 
         def _apply_n(key, pdf):
             groups = []
-            for idx, sl in enumerate(slice_list):
+            for idx, sl in enumerate(slices):
                 groups.append(pdf[pdf["__idx"] == idx][sl])
             return fn(key, *groups)
 
@@ -1034,34 +1041,12 @@ class FlowPlanner:
         import pandas as pd
 
         n_in = len(renamed)
-        n_keys = len(key_names[0])
-        key_aliases = [f"__k{i}" for i in range(n_keys)]
-        col_types: dict[str, T.DataType] = {}
-        slices: list[list[str]] = []
-        for rdf in renamed:
-            slices.append(list(rdf.columns))
-            for f in rdf.schema.fields:
-                col_types[f.name] = f.dataType
-        all_cols = [c for sl in slices for c in sl]
-        parts = []
-        for idx, (rdf, keys_i, sl) in enumerate(zip(renamed, key_names, slices)):
-            sel = [F.col(k).alias(a) for k, a in zip(keys_i, key_aliases)]
-            sel.append(F.lit(idx).alias("__idx"))
-            own = set(sl)
-            for c in all_cols:
-                sel.append(F.col(c) if c in own
-                           else F.lit(None).cast(col_types[c]).alias(c))
-            parts.append(rdf.select(*sel))
-        unified = parts[0]
-        for prt in parts[1:]:
-            unified = unified.unionByName(prt)
+        unified, key_aliases, slices = _tagged_union(renamed, key_names)
         # co-partition by key; within a partition: key-major, rhs before lhs
         lhs_last = (F.col("__idx") == 0).cast("int")
         sorted_df = (unified.repartition(_python_stage_parts(unified),
                                          *[F.col(a) for a in key_aliases])
                      .sortWithinPartitions(*key_aliases, lhs_last, "__idx"))
-
-        slice_list = slices
 
         def _stream(batches):
             cur = None            # current key tuple
@@ -1071,11 +1056,11 @@ class FlowPlanner:
 
             def rhs_frames():
                 return [pd.concat(rhs[i], ignore_index=True) if rhs[i]
-                        else tmpl[slice_list[i]].iloc[0:0]
+                        else tmpl[slices[i]].iloc[0:0]
                         for i in range(1, n_in)]
 
             def empty_lhs():
-                return tmpl[slice_list[0]].iloc[0:0]
+                return tmpl[slices[0]].iloc[0:0]
 
             for pdf in batches:
                 if tmpl is None:
@@ -1097,10 +1082,10 @@ class FlowPlanner:
                     if cur is None:
                         cur, rhs, lhs_called = key, {i: [] for i in range(1, n_in)}, False
                     for i in range(1, n_in):
-                        part = kpdf[kpdf["__idx"] == i][slice_list[i]]
+                        part = kpdf[kpdf["__idx"] == i][slices[i]]
                         if len(part):
                             rhs[i].append(part)
-                    lpart = kpdf[kpdf["__idx"] == 0][slice_list[0]]
+                    lpart = kpdf[kpdf["__idx"] == 0][slices[0]]
                     if len(lpart):
                         res = fn(cur, lpart, *rhs_frames())
                         lhs_called = True

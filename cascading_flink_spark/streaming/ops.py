@@ -1331,6 +1331,57 @@ def stream_psi_monitor(df: DataFrame, reference: DataFrame,
          .alias("psi_x1e6"))
 
 
+def _grid_snapshot_agg(df: DataFrame, reference: DataFrame,
+                       value_col: str, ts_col: str, window: str,
+                       watermark: str, group_col: str | None, q,
+                       max_keys: int, op: str, batch: str):
+    """The bounded reference-grid snapshot shared by
+    :func:`stream_ks_monitor` and :func:`stream_w1_monitor`: the
+    reference's sorted distinct ``q``-quantized value grid with exact
+    cumulative counts (one driver pull BOUNDED by ``max_keys``, raising
+    loudly past it or on an empty reference), then ONE watermarked
+    windowed aggregate over ``df`` of ``n``, ``n_nov`` (values off the
+    grid) and one conditional-sum column ``__c<i> = sum(v <= t_i)`` per
+    grid cut.  NULL values drop their row (batch parity).  ``op`` and
+    ``batch`` name the monitor and its batch twin in the errors.
+    Returns ``(agg, grid, cum, n_ref, group_cols)``."""
+    grid_rows = (reference.filter(F.col(value_col).isNotNull())
+                 .groupBy(q(F.col(value_col)).alias("__v"))
+                 .agg(F.count(F.lit(1)).cast("long").alias("__c"))
+                 .orderBy("__v")
+                 .limit(int(max_keys) + 1)
+                 .collect())
+    if len(grid_rows) > int(max_keys):
+        raise ValueError(
+            f"{op}: reference support exceeds max_keys="
+            f"{max_keys} distinct (quantized) values; raise quantize_x "
+            f"coarsening or run the batch {batch} for "
+            "high-cardinality scores")
+    if not grid_rows:
+        raise ValueError(f"{op}: reference is empty")
+    grid = [r["__v"] for r in grid_rows]
+    cum, running = [], 0
+    for r in grid_rows:
+        running += r["__c"]
+        cum.append(running)
+    n_ref = running
+
+    df = _ensure_event_time(df, ts_col)
+    df = df.withWatermark(ts_col, watermark)
+    g = [group_col] if group_col is not None else []
+    d = (df.select(F.col(ts_col), *g,
+                   q(F.col(value_col)).alias("__v"))
+         .filter(F.col("__v").isNotNull()))
+    aggs = [F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum((~F.col("__v").isin(grid)).cast("long"))
+             .cast("long").alias("n_nov")]
+    for i, t in enumerate(grid):
+        aggs.append(F.sum((F.col("__v") <= F.lit(t)).cast("long"))
+                    .cast("long").alias(f"__c{i}"))
+    agg = d.groupBy(F.window(ts_col, window), *g).agg(*aggs)
+    return agg, grid, cum, n_ref, g
+
+
 def stream_ks_monitor(df: DataFrame, reference: DataFrame,
                       value_col: str, ts_col: str = "ts",
                       window: str = "10 minutes",
@@ -1391,41 +1442,9 @@ def stream_ks_monitor(df: DataFrame, reference: DataFrame,
                 else F.round(col.cast("double") * int(quantize_x))
                 .cast("long"))
 
-    grid_rows = (reference.filter(F.col(value_col).isNotNull())
-                 .groupBy(_q(F.col(value_col)).alias("__v"))
-                 .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-                 .orderBy("__v")
-                 .limit(int(max_keys) + 1)
-                 .collect())
-    if len(grid_rows) > int(max_keys):
-        raise ValueError(
-            f"stream_ks_monitor: reference support exceeds max_keys="
-            f"{max_keys} distinct (quantized) values; raise quantize_x "
-            "coarsening or run the batch ks_statistic for "
-            "high-cardinality scores")
-    if not grid_rows:
-        raise ValueError("stream_ks_monitor: reference is empty")
-    grid = [r["__v"] for r in grid_rows]
-    cum, running = [], 0
-    for r in grid_rows:
-        running += r["__c"]
-        cum.append(running)
-    n_ref = running
-
-    df = _ensure_event_time(df, ts_col)
-    df = df.withWatermark(ts_col, watermark)
-    g = [group_col] if group_col is not None else []
-    # NULL values drop their row — batch ks_statistic parity
-    d = (df.select(F.col(ts_col), *g,
-                   _q(F.col(value_col)).alias("__v"))
-         .filter(F.col("__v").isNotNull()))
-    aggs = [F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum((~F.col("__v").isin(grid)).cast("long"))
-             .cast("long").alias("n_nov")]
-    for i, t in enumerate(grid):
-        aggs.append(F.sum((F.col("__v") <= F.lit(t)).cast("long"))
-                    .cast("long").alias(f"__c{i}"))
-    agg = d.groupBy(F.window(ts_col, window), *g).agg(*aggs)
+    agg, grid, cum, n_ref, g = _grid_snapshot_agg(
+        df, reference, value_col, ts_col, window, watermark, group_col,
+        _q, max_keys, "stream_ks_monitor", "ks_statistic")
 
     # the ks_statistic numerator spelling verbatim: side A = window
     # (cum count __ci, total n), side B = reference (literal cum r_i,
@@ -1494,41 +1513,9 @@ def stream_w1_monitor(df: DataFrame, reference: DataFrame,
                 else F.round(col.cast("double") * int(quantize_x))
                 .cast("long"))
 
-    grid_rows = (reference.filter(F.col(value_col).isNotNull())
-                 .groupBy(_q(F.col(value_col)).alias("__v"))
-                 .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-                 .orderBy("__v")
-                 .limit(int(max_keys) + 1)
-                 .collect())
-    if len(grid_rows) > int(max_keys):
-        raise ValueError(
-            f"stream_w1_monitor: reference support exceeds max_keys="
-            f"{max_keys} distinct (quantized) values; raise quantize_x "
-            "coarsening or run the batch wasserstein_distance for "
-            "high-cardinality scores")
-    if not grid_rows:
-        raise ValueError("stream_w1_monitor: reference is empty")
-    grid = [r["__v"] for r in grid_rows]
-    cum, running = [], 0
-    for r in grid_rows:
-        running += r["__c"]
-        cum.append(running)
-    n_ref = running
-
-    df = _ensure_event_time(df, ts_col)
-    df = df.withWatermark(ts_col, watermark)
-    g = [group_col] if group_col is not None else []
-    # NULL values drop their row — batch wasserstein parity
-    d = (df.select(F.col(ts_col), *g,
-                   _q(F.col(value_col)).alias("__v"))
-         .filter(F.col("__v").isNotNull()))
-    aggs = [F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum((~F.col("__v").isin(grid)).cast("long"))
-             .cast("long").alias("n_nov")]
-    for i, t in enumerate(grid):
-        aggs.append(F.sum((F.col("__v") <= F.lit(t)).cast("long"))
-                    .cast("long").alias(f"__c{i}"))
-    agg = d.groupBy(F.window(ts_col, window), *g).agg(*aggs)
+    agg, grid, cum, n_ref, g = _grid_snapshot_agg(
+        df, reference, value_col, ts_col, window, watermark, group_col,
+        _q, max_keys, "stream_w1_monitor", "wasserstein_distance")
 
     # wasserstein_distance numerator verbatim: per-cut |cdf gap| *
     # lead-gap, gaps plan-time literals off the snapshot grid; the

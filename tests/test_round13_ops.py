@@ -27,7 +27,6 @@ def _dup_free(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-@pytest.mark.slow  # r15: heavy, round-close full gate only
 def test_auto_equals_true_and_false_jaccard(spark):
     """'auto' is output-identical to both forced modes on a dup-dense
     AND a dup-free corpus — the probe changes only the plan."""
@@ -43,7 +42,6 @@ def test_auto_equals_true_and_false_jaccard(spark):
         assert outs[0] == outs[1] == outs[2]
 
 
-@pytest.mark.slow  # r15: heavy, round-close full gate only
 def test_auto_equals_true_and_false_containment(spark):
     from cascading_flink_spark.extensions import ngram_containment_pairs
 
@@ -57,7 +55,6 @@ def test_auto_equals_true_and_false_containment(spark):
         assert outs[0] == outs[1] == outs[2]
 
 
-@pytest.mark.slow  # r15: heavy, round-close full gate only
 def test_auto_equals_true_and_false_edit(spark):
     from cascading_flink_spark.extensions import edit_dup_pairs
 

@@ -116,12 +116,13 @@ def test_strip_rebuild_matches_token_level_model(spark):
          (3, ["k", "l", "m"]),          # untouched
          (4, [])],                      # empty doc
         "id long, t array<string>")
+    # k=1 windows: each removed row names exactly one position
     removed = spark.createDataFrame(
         [(1, 1), (1, 2), (1, 2),        # duplicate position must fold
          (2, 0), (2, 1)],
-        "id long, ti int")
+        "id long, pos int")
     got = {r["doc_id"]: (r["clean_text"], r["kept"], r["gone"])
-           for r in _strip_rebuild(base, removed, "doc_id",
+           for r in _strip_rebuild(base, removed, 1, "doc_id",
                                    "kept", "gone").collect()}
     assert got == {1: ("a d", 2, 2),
                    2: ("", 0, 2),
